@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from kafkastreamsjavachallenge_spark.streaming.sinks import _start
+
 LOG_FRAME_SCHEMA = StructType(
     [
         StructField("ts", LongType()),  # unix seconds (README.md:23)
@@ -111,19 +113,21 @@ def write_counts(
     topic: str,
     checkpoint: str,
     output_mode: str = "update",
+    state_partitions: int | str | None = "auto",
 ):
     """S2: produce (key = window-start unix-seconds string, value = count
     string) — the reference's output record shape
-    (UniqueUsersApp.java:125,130,133)."""
+    (UniqueUsersApp.java:125,130,133).  ``state_partitions`` sizes the
+    topology's state stores as in ``run_to_memory`` (default ``"auto"``)."""
     out = result.select(
         F.unix_timestamp("window_start").cast("string").alias("key"),
         F.col("unique_users").cast("string").alias("value"),
     )
-    return (
+    writer = (
         out.writeStream.format("kafka")
         .option("kafka.bootstrap.servers", brokers)
         .option("topic", topic)
         .option("checkpointLocation", checkpoint)
         .outputMode(output_mode)
-        .start()
     )
+    return _start(writer, result.sparkSession, state_partitions)

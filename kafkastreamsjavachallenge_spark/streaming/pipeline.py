@@ -25,6 +25,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafkastreamsjavachallenge_spark.streaming.sinks import _start
+
 
 def ensure_event_time(df: DataFrame, ts_col: str) -> DataFrame:
     """Normalize an event-time column to TimestampType for watermarking.
@@ -190,17 +192,14 @@ def run_to_memory(
     availableNow processes all currently-available input then stops —
     letting the batch-oriented harness exercise the streaming engine.
 
-    ``state_partitions`` sets the stateful-operator partition count for
-    this query (via the shuffle-partitions conf at plan time, restored
-    after).  A streaming query's state partitioning is pinned by its first
-    checkpoint and every micro-batch pays a fixed per-partition state-store
-    commit cost, so it should track stateful-key cardinality × executor
-    count — NOT inherit whatever relational shuffle setting happens to be
-    live (a vanilla session's 200 means 200 state-store commits per batch
-    even for tiny state).  The default ``"auto"`` uses
-    ``max(8, defaultParallelism)`` — one store per core, the right order
-    on local[N] and on a multi-executor cluster alike.  Pass an int to
-    pin it explicitly, or ``None`` to inherit the live session conf.
+    ``state_partitions`` sizes the stateful operators' state stores by the
+    rule every streaming sink shares (``streaming/sinks.py _start``):
+    ``"auto"`` (default) = ``max(8, defaultParallelism)``, one store per
+    core, so a vanilla session's 200 shuffle partitions never become 200
+    state-store commits per batch; an int pins the count; ``None``
+    inherits the live session conf.  The shuffle-partitions conf carries
+    the count only while the query starts and is restored as soon as
+    ``start()`` returns, not after the drain.
 
     ``checkpoint`` overrides the throwaway temp checkpoint dir — pass a
     durable location to resume across runs (production S2 path does the
@@ -220,36 +219,29 @@ def _drain_to_memory(
     checkpoint: str | None,
 ):
     """Shared drain core for run_to_memory / run_with_observed: start the
-    availableNow memory-sink query under the state-partition conf, await
-    termination, restore the conf, and delete a THROWAWAY checkpoint
-    (the drain is complete and the memory sink owns the results; durable
-    caller-passed checkpoints are kept).  Returns (sink DataFrame, the
-    terminated StreamingQuery — still readable for recentProgress)."""
+    availableNow memory-sink query under the state-partition rule
+    (``sinks._start``), await termination, and delete a THROWAWAY
+    checkpoint (the drain is complete and the memory sink owns the
+    results; durable caller-passed checkpoints are kept).  Returns (sink
+    DataFrame, the terminated StreamingQuery — still readable for
+    recentProgress)."""
     import shutil
 
     spark = result.sparkSession
     name = query_name or f"q_{uuid.uuid4().hex[:8]}"
     throwaway = checkpoint is None
     ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
-    conf_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(conf_key)
-    if state_partitions == "auto":
-        state_partitions = max(8, spark.sparkContext.defaultParallelism)
-    if state_partitions is not None:
-        spark.conf.set(conf_key, str(state_partitions))
     try:
-        q = (
+        writer = (
             result.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
+        q = _start(writer, spark, state_partitions)
         q.awaitTermination()
     finally:
-        if state_partitions is not None:
-            spark.conf.set(conf_key, saved)
         if throwaway:
             shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name), q

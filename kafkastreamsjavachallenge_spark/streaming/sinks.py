@@ -1,8 +1,12 @@
 """Streaming sinks beyond the Kafka producer (sources/kafka.py write_counts
-covers S2, UniqueUsersApp.java:133): partquet files, memory (tests), and
+covers S2, UniqueUsersApp.java:133): parquet files, memory (tests), and
 the foreachBatch escape hatch for sinks Spark has no native writer for.
 
 Scale notes:
+- Every sink here, ``write_counts`` and ``run_to_memory`` start their
+  query through ``_start``, which sizes the stateful operators' stores by
+  one rule (``state_partitions="auto"`` = ``max(8, defaultParallelism)``)
+  instead of the session's relational shuffle setting.
 - The file sink is exactly-once per partition via the sink log; partition
   the output by a low-cardinality time-derived column so downstream scans
   partition-prune (never by a high-cardinality key — small-files blowup).
@@ -13,9 +17,50 @@ Scale notes:
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+# Held across set -> start() -> restore so two threads starting queries on
+# one session cannot restore each other's value.
+_START_LOCK = threading.Lock()
+
+
+def _start(
+    writer: DataStreamWriter,
+    spark: SparkSession,
+    state_partitions: int | str | None,
+) -> StreamingQuery:
+    """Start ``writer`` with its stateful operators sized to
+    ``state_partitions``.
+
+    A streaming query's state-store count is the shuffle-partition conf
+    live when the query is constructed: ``start()`` clones the session for
+    the stream, and the first micro-batch pins the count in the
+    checkpoint's offset log (a resumed query keeps the pinned count).
+    Every micro-batch commits every store, so the count should track
+    state-key cardinality × executors, not the relational shuffle setting
+    (a vanilla session's 200 means 200 commits per stateful operator per
+    batch, even for tiny state).  ``"auto"`` uses
+    ``max(8, defaultParallelism)``, one store per core; an int pins the
+    count; ``None`` inherits the live conf.  The session's own value is
+    restored as soon as ``start()`` returns, so batch queries planned
+    while the stream runs see the user's setting.
+    """
+    if state_partitions is None:
+        return writer.start()
+    if state_partitions == "auto":
+        state_partitions = max(8, spark.sparkContext.defaultParallelism)
+    with _START_LOCK:
+        saved = spark.conf.get(_SHUFFLE_PARTITIONS)
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(state_partitions))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(_SHUFFLE_PARTITIONS, saved)
 
 
 def to_parquet_files(
@@ -25,6 +70,7 @@ def to_parquet_files(
     partition_by: list[str] | None = None,
     output_mode: str = "append",
     available_now: bool = True,
+    state_partitions: int | str | None = "auto",
 ):
     """File sink: append-mode parquet with optional partition columns."""
     w = (
@@ -37,7 +83,7 @@ def to_parquet_files(
         w = w.partitionBy(*partition_by)
     if available_now:
         w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(w, result.sparkSession, state_partitions)
 
 
 def for_each_batch(
@@ -46,6 +92,7 @@ def for_each_batch(
     checkpoint: str,
     output_mode: str = "update",
     available_now: bool = True,
+    state_partitions: int | str | None = "auto",
 ):
     """foreachBatch sink: ``fn(batch_df, batch_id)`` per micro-batch."""
     w = (
@@ -55,4 +102,4 @@ def for_each_batch(
     )
     if available_now:
         w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(w, result.sparkSession, state_partitions)

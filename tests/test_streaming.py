@@ -81,33 +81,238 @@ def test_multibatch_append_emits_closed_windows_only(spark, event_files):
     assert all(w > max(got) for w in open_windows)
 
 
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture
+def vanilla_shuffle(spark):
+    """The session at a vanilla session's 200 shuffle partitions,
+    restored after the test."""
+    saved = spark.conf.get(SHUFFLE)
+    spark.conf.set(SHUFFLE, "200")
+    yield
+    spark.conf.set(SHUFFLE, saved)
+
+
+def _store_dirs(ckpt: str, op: int) -> int:
+    """Physical state-store count of stateful operator ``op``."""
+    return sum(p.isdigit() for p in os.listdir(os.path.join(ckpt, "state", str(op))))
+
+
 def test_auto_state_partitions_ignore_session_shuffle_conf(
-    spark, event_files, tmp_path
+    spark, event_files, tmp_path, vanilla_shuffle
 ):
-    """Default 'auto' state sizing: a vanilla session's 200 shuffle
-    partitions must NOT leak into streaming state (200 state-store commits
-    per micro-batch for tiny state).  The checkpoint's state/0/<p> dirs
-    are the physical store count — expect max(8, defaultParallelism) of
-    them, and the session conf restored afterwards."""
+    """Default 'auto' state sizing on every sink: a vanilla session's 200
+    shuffle partitions must NOT leak into streaming state (200 state-store
+    commits per operator per micro-batch for tiny state).  The checkpoint's
+    state/<op>/<p> dirs are the physical store count — expect
+    max(8, defaultParallelism) for both operators of the unique-users
+    topology (dedup, count), and the session conf restored afterwards."""
+    from kafkastreamsjavachallenge_spark.streaming.sinks import (
+        for_each_batch,
+        to_parquet_files,
+    )
+
     d, ev = event_files
-    conf_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "200")
-    ckpt = str(tmp_path / "auto_state_ckpt")
-    try:
+    expected = max(8, spark.sparkContext.defaultParallelism)
+
+    def memory(result, ckpt):
+        assert run_to_memory(result, output_mode="update", checkpoint=ckpt).count() > 0
+
+    def foreach(result, ckpt):
+        rows = []
+        for_each_batch(result, lambda bdf, _: rows.extend(bdf.collect()), ckpt).awaitTermination()
+        assert rows
+
+    def parquet(result, ckpt):
+        out = str(tmp_path / "auto_state_out")
+        to_parquet_files(result, out, ckpt).awaitTermination()
+        assert spark.read.parquet(out).count() > 0
+
+    for sink in (memory, foreach, parquet):
+        ckpt = str(tmp_path / f"auto_state_ckpt_{sink.__name__}")
         stream = file_stream(spark, d, ev.schema)
-        result = streaming_unique_users(stream, "ts", "user_id", "1 minute")
-        table = run_to_memory(result, output_mode="update", checkpoint=ckpt)
-        assert table.count() > 0
-        assert spark.conf.get(conf_key) == "200"  # restored
-        expected = max(8, spark.sparkContext.defaultParallelism)
-        state0 = os.path.join(ckpt, "state", "0")
-        parts = [p for p in os.listdir(state0) if p.isdigit()]
-        assert len(parts) == expected, (
-            f"state stores {len(parts)} != auto-derived {expected}"
-        )
+        sink(streaming_unique_users(stream, "ts", "user_id", "1 minute"), ckpt)
+        assert spark.conf.get(SHUFFLE) == "200"  # restored
+        for op in (0, 1):
+            assert _store_dirs(ckpt, op) == expected, (
+                f"{sink.__name__} state/{op}: {_store_dirs(ckpt, op)} "
+                f"stores != auto-derived {expected}"
+            )
+
+
+def test_session_shuffle_conf_restored_while_query_runs(
+    spark, event_files, tmp_path, vanilla_shuffle
+):
+    """The state count is applied only while the query starts: batch
+    queries planned on the same session during the stream see the user's
+    setting, not the state count."""
+    import threading
+    import time as _t
+
+    from kafkastreamsjavachallenge_spark.streaming.sinks import for_each_batch
+
+    d, ev = event_files
+    batches = []
+    stream = file_stream(spark, d, ev.schema, max_files_per_trigger=1)
+    q = for_each_batch(
+        streaming_unique_users(stream, "ts", "user_id", "1 minute"),
+        lambda bdf, bid: batches.append(bdf.collect()),
+        str(tmp_path / "ckpt_live"),
+        available_now=False,
+    )
+    try:
+        assert q.isActive
+        assert spark.conf.get(SHUFFLE) == "200"
+        q.processAllAvailable()
+        assert q.isActive and batches
+        assert spark.conf.get(SHUFFLE) == "200"
     finally:
-        spark.conf.set(conf_key, saved)
+        q.stop()
+
+    # run_to_memory blocks for the whole drain: read the conf from here
+    # once its query has finished a micro-batch
+    drained = []
+    stream = file_stream(spark, d, ev.schema, max_files_per_trigger=1)
+    t = threading.Thread(
+        target=lambda: drained.append(run_to_memory(
+            streaming_unique_users(stream, "ts", "user_id", "1 minute")
+        ))
+    )
+    t.start()
+    deadline = _t.time() + 120
+    while not drained and not any(q.recentProgress for q in spark.streams.active):
+        assert _t.time() < deadline, "drain made no progress"
+        _t.sleep(0.05)
+    during = spark.conf.get(SHUFFLE)
+    t.join(timeout=300)
+    assert not t.is_alive() and drained and during == "200"
+
+
+def test_every_sink_starts_under_state_partition_rule(
+    spark, monkeypatch, tmp_path, vanilla_shuffle
+):
+    """All three public sinks apply the rule at start() ("auto", an int,
+    or None = inherit) and restore the session value after.  No broker
+    exists here, so start() is replaced by a recorder of the live conf."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from kafkastreamsjavachallenge_spark.sources.kafka import write_counts
+    from kafkastreamsjavachallenge_spark.streaming.sinks import (
+        for_each_batch,
+        to_parquet_files,
+    )
+
+    seen = []
+    monkeypatch.setattr(
+        DataStreamWriter, "start", lambda self, *a, **k: seen.append(spark.conf.get(SHUFFLE))
+    )
+    counts = spark.readStream.format("rate").load().select(
+        F.col("timestamp").alias("window_start"), F.col("value").alias("unique_users")
+    )
+    ckpt = str(tmp_path / "ckpt")
+    sinks = {
+        "for_each_batch": lambda sp: for_each_batch(
+            counts, lambda *_: None, ckpt, state_partitions=sp
+        ),
+        "to_parquet_files": lambda sp: to_parquet_files(
+            counts, str(tmp_path / "out"), ckpt, state_partitions=sp
+        ),
+        "write_counts": lambda sp: write_counts(
+            counts, "localhost:9092", "t", ckpt, state_partitions=sp
+        ),
+    }
+    auto = str(max(8, spark.sparkContext.defaultParallelism))
+    for name, start in sinks.items():
+        for sp, want in (("auto", auto), (5, "5"), (None, "200")):
+            seen.clear()
+            start(sp)
+            assert seen == [want], (name, sp, seen)
+            assert spark.conf.get(SHUFFLE) == "200", (name, sp)
+
+
+def test_concurrent_starts_do_not_restore_each_others_conf(
+    spark, monkeypatch, tmp_path, vanilla_shuffle
+):
+    """Two threads starting queries at once: each start() sees its own
+    state count and the session ends at its own value."""
+    import threading
+    import time as _t
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from kafkastreamsjavachallenge_spark.streaming.sinks import for_each_batch
+
+    seen = []
+
+    def slow_start(self, *a, **k):
+        before = spark.conf.get(SHUFFLE)
+        _t.sleep(0.2)  # widen the window a racing thread would hit
+        seen.append((before, spark.conf.get(SHUFFLE)))
+
+    monkeypatch.setattr(DataStreamWriter, "start", slow_start)
+    stream = spark.readStream.format("rate").load()
+    threads = [
+        threading.Thread(
+            target=for_each_batch,
+            args=(stream, lambda *_: None, str(tmp_path / f"c{n}")),
+            kwargs={"state_partitions": n},
+        )
+        for n in (3, 5)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert not any(t.is_alive() for t in threads)
+    assert sorted(seen) == [("3", "3"), ("5", "5")]
+    assert spark.conf.get(SHUFFLE) == "200"
+
+
+def test_resume_keeps_checkpoint_state_partitions(spark, event_files, tmp_path):
+    """A for_each_batch query restarted from a checkpoint created with 4
+    stores keeps 4 — the offset-log pin wins over "auto" — and its final
+    counts equal those of one uninterrupted run."""
+    import shutil
+
+    from kafkastreamsjavachallenge_spark.streaming.sinks import for_each_batch
+
+    d, ev = event_files
+    files = sorted(os.listdir(d))
+    src = tmp_path / "resume_src"
+    src.mkdir()
+
+    def run(path, ckpt, emitted, **kw):
+        stream = file_stream(spark, str(path), ev.schema, max_files_per_trigger=1)
+        for_each_batch(
+            streaming_unique_users(stream, "ts", "user_id", "1 minute"),
+            lambda bdf, _: emitted.extend(
+                (r["window_start"], r["unique_users"]) for r in bdf.collect()
+            ),
+            ckpt,
+            **kw,
+        ).awaitTermination()
+
+    def final(emitted):
+        got: dict = {}
+        for w, n in emitted:
+            got[w] = max(got.get(w, 0), n)
+        return got
+
+    ckpt = str(tmp_path / "ckpt_resume")
+    resumed: list = []
+    for f in files[:2]:
+        shutil.copy(os.path.join(d, f), src / f)
+    run(src, ckpt, resumed, state_partitions=4)
+    for f in files[2:]:
+        shutil.copy(os.path.join(d, f), src / f)
+    run(src, ckpt, resumed)  # "auto" would be max(8, cores)
+    assert max(8, spark.sparkContext.defaultParallelism) != 4
+    assert _store_dirs(ckpt, 0) == _store_dirs(ckpt, 1) == 4
+
+    whole: list = []
+    run(d, str(tmp_path / "ckpt_whole"), whole)
+    assert final(resumed) == final(whole) and resumed
 
 
 def test_stream_stream_join_matches_batch(spark, event_files):
