@@ -113,12 +113,11 @@ def write_counts(
     topic: str,
     checkpoint: str,
     output_mode: str = "update",
-    state_partitions: int | str | None = "auto",
 ):
     """S2: produce (key = window-start unix-seconds string, value = count
     string) — the reference's output record shape
-    (UniqueUsersApp.java:125,130,133).  ``state_partitions`` sizes the
-    topology's state stores as in ``run_to_memory`` (default ``"auto"``)."""
+    (UniqueUsersApp.java:125,130,133).  The topology's state stores are
+    sized by the ``"auto"`` rule (``streaming/sinks.py _start``)."""
     out = result.select(
         F.unix_timestamp("window_start").cast("string").alias("key"),
         F.col("unique_users").cast("string").alias("value"),
@@ -130,4 +129,4 @@ def write_counts(
         .option("checkpointLocation", checkpoint)
         .outputMode(output_mode)
     )
-    return _start(writer, result.sparkSession, state_partitions)
+    return _start(writer, result.sparkSession, "auto")

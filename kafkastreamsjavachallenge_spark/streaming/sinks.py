@@ -3,10 +3,11 @@ covers S2, UniqueUsersApp.java:133): parquet files, memory (tests), and
 the foreachBatch escape hatch for sinks Spark has no native writer for.
 
 Scale notes:
-- Every sink here, ``write_counts`` and ``run_to_memory`` start their
-  query through ``_start``, which sizes the stateful operators' stores by
-  one rule (``state_partitions="auto"`` = ``max(8, defaultParallelism)``)
-  instead of the session's relational shuffle setting.
+- State sizing: every sink here, ``write_counts`` and ``run_to_memory``
+  start their query through ``_start``, which sizes the stateful
+  operators' stores as ``max(8, defaultParallelism)`` (one per core)
+  instead of the session's relational shuffle setting; only
+  ``run_to_memory`` lets the caller pick another count.
 - The file sink is exactly-once per partition via the sink log; partition
   the output by a low-cardinality time-derived column so downstream scans
   partition-prune (never by a high-cardinality key — small-files blowup).
@@ -47,8 +48,10 @@ def _start(
     batch, even for tiny state).  ``"auto"`` uses
     ``max(8, defaultParallelism)``, one store per core; an int pins the
     count; ``None`` inherits the live conf.  The session's own value is
-    restored as soon as ``start()`` returns, so batch queries planned
-    while the stream runs see the user's setting.
+    restored as soon as ``start()`` returns, so batch queries planned on
+    the session while the stream runs see the user's setting.  Inside the
+    stream the count applies to every shuffle, including those a
+    foreachBatch function runs on its batch DataFrame.
     """
     if state_partitions is None:
         return writer.start()
@@ -70,9 +73,9 @@ def to_parquet_files(
     partition_by: list[str] | None = None,
     output_mode: str = "append",
     available_now: bool = True,
-    state_partitions: int | str | None = "auto",
 ):
-    """File sink: append-mode parquet with optional partition columns."""
+    """File sink: append-mode parquet with optional partition columns.
+    State stores are sized by the ``"auto"`` rule (``_start``)."""
     w = (
         result.writeStream.format("parquet")
         .option("path", path)
@@ -83,7 +86,7 @@ def to_parquet_files(
         w = w.partitionBy(*partition_by)
     if available_now:
         w = w.trigger(availableNow=True)
-    return _start(w, result.sparkSession, state_partitions)
+    return _start(w, result.sparkSession, "auto")
 
 
 def for_each_batch(
@@ -92,9 +95,15 @@ def for_each_batch(
     checkpoint: str,
     output_mode: str = "update",
     available_now: bool = True,
-    state_partitions: int | str | None = "auto",
 ):
-    """foreachBatch sink: ``fn(batch_df, batch_id)`` per micro-batch."""
+    """foreachBatch sink: ``fn(batch_df, batch_id)`` per micro-batch.
+
+    State stores are sized by the ``"auto"`` rule (``_start``).  The
+    stream runs on the session copy ``start()`` makes, so shuffles ``fn``
+    runs on ``batch_df`` also plan with that count (and, as in any Spark
+    stream, without adaptive execution), not the session's
+    ``spark.sql.shuffle.partitions``; ``fn`` can repartition explicitly
+    when it needs another count."""
     w = (
         result.writeStream.foreachBatch(fn)
         .option("checkpointLocation", checkpoint)
@@ -102,4 +111,4 @@ def for_each_batch(
     )
     if available_now:
         w = w.trigger(availableNow=True)
-    return _start(w, result.sparkSession, state_partitions)
+    return _start(w, result.sparkSession, "auto")

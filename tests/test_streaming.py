@@ -171,7 +171,8 @@ def test_session_shuffle_conf_restored_while_query_runs(
         q.stop()
 
     # run_to_memory blocks for the whole drain: read the conf from here
-    # once its query has finished a micro-batch
+    # while its query runs — it has finished a micro-batch before the read
+    # and is still active after it
     drained = []
     stream = file_stream(spark, d, ev.schema, max_files_per_trigger=1)
     t = threading.Thread(
@@ -181,10 +182,14 @@ def test_session_shuffle_conf_restored_while_query_runs(
     )
     t.start()
     deadline = _t.time() + 120
-    while not drained and not any(q.recentProgress for q in spark.streams.active):
+    while True:
+        assert not drained, "drain ended before the conf was read mid-run"
         assert _t.time() < deadline, "drain made no progress"
+        live = [q for q in spark.streams.active if q.recentProgress]
+        during = spark.conf.get(SHUFFLE)
+        if live and live[0].isActive:
+            break
         _t.sleep(0.05)
-    during = spark.conf.get(SHUFFLE)
     t.join(timeout=300)
     assert not t.is_alive() and drained and during == "200"
 
@@ -192,9 +197,9 @@ def test_session_shuffle_conf_restored_while_query_runs(
 def test_every_sink_starts_under_state_partition_rule(
     spark, monkeypatch, tmp_path, vanilla_shuffle
 ):
-    """All three public sinks apply the rule at start() ("auto", an int,
-    or None = inherit) and restore the session value after.  No broker
-    exists here, so start() is replaced by a recorder of the live conf."""
+    """All three public sinks start under the "auto" rule and restore the
+    session value after.  No broker exists here, so start() is replaced by
+    a recorder of the live conf."""
     from pyspark.sql.streaming import DataStreamWriter
 
     from kafkastreamsjavachallenge_spark.sources.kafka import write_counts
@@ -211,24 +216,12 @@ def test_every_sink_starts_under_state_partition_rule(
         F.col("timestamp").alias("window_start"), F.col("value").alias("unique_users")
     )
     ckpt = str(tmp_path / "ckpt")
-    sinks = {
-        "for_each_batch": lambda sp: for_each_batch(
-            counts, lambda *_: None, ckpt, state_partitions=sp
-        ),
-        "to_parquet_files": lambda sp: to_parquet_files(
-            counts, str(tmp_path / "out"), ckpt, state_partitions=sp
-        ),
-        "write_counts": lambda sp: write_counts(
-            counts, "localhost:9092", "t", ckpt, state_partitions=sp
-        ),
-    }
+    for_each_batch(counts, lambda *_: None, ckpt)
+    to_parquet_files(counts, str(tmp_path / "out"), ckpt)
+    write_counts(counts, "localhost:9092", "t", ckpt)
     auto = str(max(8, spark.sparkContext.defaultParallelism))
-    for name, start in sinks.items():
-        for sp, want in (("auto", auto), (5, "5"), (None, "200")):
-            seen.clear()
-            start(sp)
-            assert seen == [want], (name, sp, seen)
-            assert spark.conf.get(SHUFFLE) == "200", (name, sp)
+    assert seen == [auto] * 3
+    assert spark.conf.get(SHUFFLE) == "200"
 
 
 def test_concurrent_starts_do_not_restore_each_others_conf(
@@ -241,7 +234,7 @@ def test_concurrent_starts_do_not_restore_each_others_conf(
 
     from pyspark.sql.streaming import DataStreamWriter
 
-    from kafkastreamsjavachallenge_spark.streaming.sinks import for_each_batch
+    from kafkastreamsjavachallenge_spark.streaming.sinks import _start
 
     seen = []
 
@@ -251,14 +244,9 @@ def test_concurrent_starts_do_not_restore_each_others_conf(
         seen.append((before, spark.conf.get(SHUFFLE)))
 
     monkeypatch.setattr(DataStreamWriter, "start", slow_start)
-    stream = spark.readStream.format("rate").load()
+    writer = spark.readStream.format("rate").load().writeStream.format("noop")
     threads = [
-        threading.Thread(
-            target=for_each_batch,
-            args=(stream, lambda *_: None, str(tmp_path / f"c{n}")),
-            kwargs={"state_partitions": n},
-        )
-        for n in (3, 5)
+        threading.Thread(target=_start, args=(writer, spark, n)) for n in (3, 5)
     ]
     for t in threads:
         t.start()
@@ -270,9 +258,10 @@ def test_concurrent_starts_do_not_restore_each_others_conf(
 
 
 def test_resume_keeps_checkpoint_state_partitions(spark, event_files, tmp_path):
-    """A for_each_batch query restarted from a checkpoint created with 4
-    stores keeps 4 — the offset-log pin wins over "auto" — and its final
-    counts equal those of one uninterrupted run."""
+    """A for_each_batch query ("auto" = max(8, cores) stores) restarted
+    from a checkpoint created with 4 stores keeps 4 — the offset-log pin
+    wins over "auto" — and its final counts equal those of one
+    uninterrupted run."""
     import shutil
 
     from kafkastreamsjavachallenge_spark.streaming.sinks import for_each_batch
@@ -282,15 +271,17 @@ def test_resume_keeps_checkpoint_state_partitions(spark, event_files, tmp_path):
     src = tmp_path / "resume_src"
     src.mkdir()
 
-    def run(path, ckpt, emitted, **kw):
+    def result(path):
         stream = file_stream(spark, str(path), ev.schema, max_files_per_trigger=1)
+        return streaming_unique_users(stream, "ts", "user_id", "1 minute")
+
+    def run(path, ckpt, emitted):
         for_each_batch(
-            streaming_unique_users(stream, "ts", "user_id", "1 minute"),
+            result(path),
             lambda bdf, _: emitted.extend(
                 (r["window_start"], r["unique_users"]) for r in bdf.collect()
             ),
             ckpt,
-            **kw,
         ).awaitTermination()
 
     def final(emitted):
@@ -300,14 +291,15 @@ def test_resume_keeps_checkpoint_state_partitions(spark, event_files, tmp_path):
         return got
 
     ckpt = str(tmp_path / "ckpt_resume")
-    resumed: list = []
     for f in files[:2]:
         shutil.copy(os.path.join(d, f), src / f)
-    run(src, ckpt, resumed, state_partitions=4)
+    first = run_to_memory(
+        result(src), output_mode="update", state_partitions=4, checkpoint=ckpt
+    )
+    resumed = [(r["window_start"], r["unique_users"]) for r in first.collect()]
     for f in files[2:]:
         shutil.copy(os.path.join(d, f), src / f)
-    run(src, ckpt, resumed)  # "auto" would be max(8, cores)
-    assert max(8, spark.sparkContext.defaultParallelism) != 4
+    run(src, ckpt, resumed)
     assert _store_dirs(ckpt, 0) == _store_dirs(ckpt, 1) == 4
 
     whole: list = []
