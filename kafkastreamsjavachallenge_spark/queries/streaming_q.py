@@ -33,6 +33,7 @@ from kafkastreamsjavachallenge_spark.streaming.pipeline import (
     streaming_sliding_counts,
     streaming_unique_users,
 )
+from kafkastreamsjavachallenge_spark.streaming.sinks import for_each_batch
 
 
 def _user_root(name: str) -> str:
@@ -747,14 +748,12 @@ def q_stream_incremental_dedup(spark, sf_dir):
             D.write_band_index(kept, idx, mode="overwrite")
         kept.select("doc_id").write.mode("append").parquet(store)
 
-    q = (
-        file_stream(spark, stage, schema, max_files_per_trigger=1)
-        .writeStream.foreachBatch(_handle)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    for_each_batch(
+        file_stream(spark, stage, schema, max_files_per_trigger=1),
+        _handle,
+        os.path.join(work, "ckpt"),
+        output_mode="append",
+    ).awaitTermination()
     return spark.read.schema("doc_id long").parquet(store).select(
         "doc_id", (F.col("doc_id") % 3).cast("int").alias("batch")
     )

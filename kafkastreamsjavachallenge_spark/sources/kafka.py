@@ -126,7 +126,6 @@ def write_counts(
         out.writeStream.format("kafka")
         .option("kafka.bootstrap.servers", brokers)
         .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
         .outputMode(output_mode)
     )
-    return _start(writer, result.sparkSession, "auto")
+    return _start(writer, result.sparkSession, "auto", checkpoint)

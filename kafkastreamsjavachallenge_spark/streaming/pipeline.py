@@ -236,10 +236,9 @@ def _drain_to_memory(
             result.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
         )
-        q = _start(writer, spark, state_partitions)
+        q = _start(writer, spark, state_partitions, ckpt)
         q.awaitTermination()
     finally:
         if throwaway:

@@ -3,11 +3,21 @@ covers S2, UniqueUsersApp.java:133): parquet files, memory (tests), and
 the foreachBatch escape hatch for sinks Spark has no native writer for.
 
 Scale notes:
-- State sizing: every sink here, ``write_counts`` and ``run_to_memory``
-  start their query through ``_start``, which sizes the stateful
-  operators' stores as ``max(8, defaultParallelism)`` (one per core)
-  instead of the session's relational shuffle setting; only
-  ``run_to_memory`` lets the caller pick another count.
+- Query start: every sink here, ``write_counts`` and ``run_to_memory``
+  start their query through ``_start``, which sets the checkpoint
+  location and applies two per-query rules while ``start()`` runs.
+- State sizing: the stateful operators' stores are sized as
+  ``max(8, defaultParallelism)`` (one per core) instead of the session's
+  relational shuffle setting; only ``run_to_memory`` lets the caller pick
+  another count.
+- Checkpoint writer: a checkpoint on the local file system is written
+  through Spark's FileSystem-based checkpoint manager instead of the
+  FileContext one.  Without the native Hadoop library every local file
+  create and rename starts ``chmod``/``readlink`` helper processes, and
+  FileContext starts about five times as many per file; a micro-batch
+  writes ≈ 20 checkpoint files.  Checkpoints on any other file system,
+  and sessions that name their own manager, keep the session's manager
+  (HDFS relies on FileContext's atomic rename-with-overwrite).
 - The file sink is exactly-once per partition via the sink log; partition
   the output by a low-cardinality time-derived column so downstream scans
   partition-prune (never by a high-cardinality key — small-files blowup).
@@ -20,50 +30,97 @@ from __future__ import annotations
 
 import threading
 from collections.abc import Callable
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 # Held across set -> start() -> restore so two threads starting queries on
-# one session cannot restore each other's value.
+# one session cannot restore each other's values.
 _START_LOCK = threading.Lock()
+
+
+def _is_local_path(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` resolves to Hadoop's local file system: a ``file:``
+    URI, or a scheme-less path while ``fs.defaultFS`` is ``file:``."""
+    scheme = urlsplit(path).scheme
+    if not scheme:
+        default_fs = (
+            spark._jsparkSession.sessionState().newHadoopConf().get("fs.defaultFS")
+        )
+        scheme = urlsplit(default_fs or "file:///").scheme
+    return scheme.lower() == "file"
 
 
 def _start(
     writer: DataStreamWriter,
     spark: SparkSession,
     state_partitions: int | str | None,
+    checkpoint: str,
 ) -> StreamingQuery:
-    """Start ``writer`` with its stateful operators sized to
-    ``state_partitions``.
+    """Start ``writer`` checkpointed at ``checkpoint``, with its stateful
+    operators sized to ``state_partitions`` and a local checkpoint written
+    through the FileSystem-based checkpoint manager.
 
-    A streaming query's state-store count is the shuffle-partition conf
-    live when the query is constructed: ``start()`` clones the session for
-    the stream, and the first micro-batch pins the count in the
-    checkpoint's offset log (a resumed query keeps the pinned count).
-    Every micro-batch commits every store, so the count should track
-    state-key cardinality × executors, not the relational shuffle setting
-    (a vanilla session's 200 means 200 commits per stateful operator per
-    batch, even for tiny state).  ``"auto"`` uses
+    State count: a streaming query's state-store count is the
+    shuffle-partition conf live when the query is constructed: ``start()``
+    clones the session for the stream, and the first micro-batch pins the
+    count in the checkpoint's offset log (a resumed query keeps the pinned
+    count).  Every micro-batch commits every store, so the count should
+    track state-key cardinality × executors, not the relational shuffle
+    setting (a vanilla session's 200 means 200 commits per stateful
+    operator per batch, even for tiny state).  ``"auto"`` uses
     ``max(8, defaultParallelism)``, one store per core; an int pins the
-    count; ``None`` inherits the live conf.  The session's own value is
-    restored as soon as ``start()`` returns, so batch queries planned on
-    the session while the stream runs see the user's setting.  Inside the
-    stream the count applies to every shuffle, including those a
-    foreachBatch function runs on its batch DataFrame.
+    count; ``None`` inherits the live conf.  Inside the stream the count
+    applies to every shuffle, including those a foreachBatch function runs
+    on its batch DataFrame.
+
+    Checkpoint manager: when ``checkpoint`` is on the local file system
+    (``_is_local_path``) and the session names no manager class,
+    ``spark.sql.streaming.checkpointFileManagerClass`` is set to the
+    FileSystem-based manager.  ``start()`` builds the offset and commit
+    logs under it, and the state stores run on the stream's session clone,
+    which keeps it.  Without the native Hadoop library a local file costs
+    ≈ 4 helper-process starts this way against ≈ 20 through the default
+    FileContext manager.  A local ``rename(2)`` is atomic under either
+    manager and both write the same files, so checkpoints written under
+    one resume under the other.  Other file systems keep the session's
+    value: HDFS relies on FileContext's atomic rename-with-overwrite.
+    The file source's own log (``sources/N``) is built later from the
+    caller's session and stays on the session's manager.
+
+    Both confs hold their values only while ``start()`` runs and are
+    restored (or unset) as soon as it returns, so batch queries planned
+    on the session while the stream runs see the user's settings.
     """
-    if state_partitions is None:
-        return writer.start()
+    writer = writer.option("checkpointLocation", checkpoint)
     if state_partitions == "auto":
         state_partitions = max(8, spark.sparkContext.defaultParallelism)
+    overrides = {}
+    if state_partitions is not None:
+        overrides[_SHUFFLE_PARTITIONS] = str(state_partitions)
     with _START_LOCK:
-        saved = spark.conf.get(_SHUFFLE_PARTITIONS)
-        spark.conf.set(_SHUFFLE_PARTITIONS, str(state_partitions))
+        if spark.conf.get(_CHECKPOINT_MANAGER, None) is None and _is_local_path(
+            spark, checkpoint
+        ):
+            overrides[_CHECKPOINT_MANAGER] = _FS_CHECKPOINT_MANAGER
+        saved = {k: spark.conf.get(k, None) for k in overrides}
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
         try:
             return writer.start()
         finally:
-            spark.conf.set(_SHUFFLE_PARTITIONS, saved)
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def to_parquet_files(
@@ -79,14 +136,13 @@ def to_parquet_files(
     w = (
         result.writeStream.format("parquet")
         .option("path", path)
-        .option("checkpointLocation", checkpoint)
         .outputMode(output_mode)
     )
     if partition_by:
         w = w.partitionBy(*partition_by)
     if available_now:
         w = w.trigger(availableNow=True)
-    return _start(w, result.sparkSession, "auto")
+    return _start(w, result.sparkSession, "auto", checkpoint)
 
 
 def for_each_batch(
@@ -104,11 +160,7 @@ def for_each_batch(
     stream, without adaptive execution), not the session's
     ``spark.sql.shuffle.partitions``; ``fn`` can repartition explicitly
     when it needs another count."""
-    w = (
-        result.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-    )
+    w = result.writeStream.foreachBatch(fn).outputMode(output_mode)
     if available_now:
         w = w.trigger(availableNow=True)
-    return _start(w, result.sparkSession, "auto")
+    return _start(w, result.sparkSession, "auto", checkpoint)

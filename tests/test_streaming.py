@@ -82,6 +82,10 @@ def test_multibatch_append_emits_closed_windows_only(spark, event_files):
 
 
 SHUFFLE = "spark.sql.shuffle.partitions"
+MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+FS_MANAGER = _CHECKPOINTING + "FileSystemBasedCheckpointFileManager"
+FC_MANAGER = _CHECKPOINTING + "FileContextBasedCheckpointFileManager"
 
 
 @pytest.fixture
@@ -197,9 +201,12 @@ def test_session_shuffle_conf_restored_while_query_runs(
 def test_every_sink_starts_under_state_partition_rule(
     spark, monkeypatch, tmp_path, vanilla_shuffle
 ):
-    """All three public sinks start under the "auto" rule and restore the
-    session value after.  No broker exists here, so start() is replaced by
-    a recorder of the live conf."""
+    """All three public sinks start under the "auto" rule and the
+    checkpoint-manager rule, and restore the session values after.  A
+    local checkpoint starts under the FileSystem-based manager; a
+    non-local one, or a session that already names a manager, starts
+    under the session's own value.  No broker or HDFS exists here, so
+    start() is replaced by a recorder of the live confs."""
     from pyspark.sql.streaming import DataStreamWriter
 
     from kafkastreamsjavachallenge_spark.sources.kafka import write_counts
@@ -210,25 +217,44 @@ def test_every_sink_starts_under_state_partition_rule(
 
     seen = []
     monkeypatch.setattr(
-        DataStreamWriter, "start", lambda self, *a, **k: seen.append(spark.conf.get(SHUFFLE))
+        DataStreamWriter,
+        "start",
+        lambda self, *a, **k: seen.append(
+            (spark.conf.get(SHUFFLE), spark.conf.get(MANAGER, None))
+        ),
     )
     counts = spark.readStream.format("rate").load().select(
         F.col("timestamp").alias("window_start"), F.col("value").alias("unique_users")
     )
-    ckpt = str(tmp_path / "ckpt")
-    for_each_batch(counts, lambda *_: None, ckpt)
-    to_parquet_files(counts, str(tmp_path / "out"), ckpt)
-    write_counts(counts, "localhost:9092", "t", ckpt)
     auto = str(max(8, spark.sparkContext.defaultParallelism))
-    assert seen == [auto] * 3
-    assert spark.conf.get(SHUFFLE) == "200"
+
+    def start_all(ckpt):
+        seen.clear()
+        for_each_batch(counts, lambda *_: None, ckpt)
+        to_parquet_files(counts, str(tmp_path / "out"), ckpt)
+        write_counts(counts, "localhost:9092", "t", ckpt)
+        assert spark.conf.get(SHUFFLE) == "200"
+        return seen
+
+    assert spark.conf.get(MANAGER, None) is None
+    assert start_all(str(tmp_path / "ckpt")) == [(auto, FS_MANAGER)] * 3
+    assert start_all((tmp_path / "ckpt").as_uri()) == [(auto, FS_MANAGER)] * 3
+    assert start_all("hdfs://nn:8020/ckpt") == [(auto, None)] * 3
+    assert spark.conf.get(MANAGER, None) is None
+    spark.conf.set(MANAGER, FC_MANAGER)
+    try:
+        assert start_all(str(tmp_path / "ckpt")) == [(auto, FC_MANAGER)] * 3
+        assert spark.conf.get(MANAGER) == FC_MANAGER
+    finally:
+        spark.conf.unset(MANAGER)
 
 
 def test_concurrent_starts_do_not_restore_each_others_conf(
     spark, monkeypatch, tmp_path, vanilla_shuffle
 ):
-    """Two threads starting queries at once: each start() sees its own
-    state count and the session ends at its own value."""
+    """Three threads starting queries at once: each start() sees its own
+    state count and checkpoint manager (two local checkpoints, one on
+    HDFS), and the session ends at its own values."""
     import threading
     import time as _t
 
@@ -237,24 +263,41 @@ def test_concurrent_starts_do_not_restore_each_others_conf(
     from kafkastreamsjavachallenge_spark.streaming.sinks import _start
 
     seen = []
+    entered = threading.Event()
+
+    def live():
+        return spark.conf.get(SHUFFLE), spark.conf.get(MANAGER, None)
 
     def slow_start(self, *a, **k):
-        before = spark.conf.get(SHUFFLE)
+        entered.set()
+        before = live()
         _t.sleep(0.2)  # widen the window a racing thread would hit
-        seen.append((before, spark.conf.get(SHUFFLE)))
+        seen.append((before, live()))
 
     monkeypatch.setattr(DataStreamWriter, "start", slow_start)
     writer = spark.readStream.format("rate").load().writeStream.format("noop")
-    threads = [
-        threading.Thread(target=_start, args=(writer, spark, n)) for n in (3, 5)
+    starts = [
+        (3, str(tmp_path / "ckpt3")),
+        (5, "hdfs://nn:8020/ckpt5"),
+        (7, str(tmp_path / "ckpt7")),
     ]
-    for t in threads:
+    threads = [
+        threading.Thread(target=_start, args=(writer, spark, n, ckpt))
+        for n, ckpt in starts
+    ]
+    threads[0].start()
+    assert entered.wait(timeout=30)
+    for t in threads[1:]:  # start while the first is inside start()
         t.start()
     for t in threads:
         t.join(timeout=30)
     assert not any(t.is_alive() for t in threads)
-    assert sorted(seen) == [("3", "3"), ("5", "5")]
-    assert spark.conf.get(SHUFFLE) == "200"
+    assert sorted(seen) == [
+        (("3", FS_MANAGER),) * 2,
+        (("5", None),) * 2,
+        (("7", FS_MANAGER),) * 2,
+    ]
+    assert live() == ("200", None)
 
 
 def test_resume_keeps_checkpoint_state_partitions(spark, event_files, tmp_path):
@@ -305,6 +348,91 @@ def test_resume_keeps_checkpoint_state_partitions(spark, event_files, tmp_path):
     whole: list = []
     run(d, str(tmp_path / "ckpt_whole"), whole)
     assert final(resumed) == final(whole) and resumed
+
+
+def _log_managers(q) -> tuple[str, str]:
+    """Checkpoint manager classes of a query's offset and commit logs."""
+    sq = q._jsq.streamingQuery()
+    return tuple(
+        log.fileManager().getClass().getName()
+        for log in (sq.offsetLog(), sq.commitLog())
+    )
+
+
+def test_local_checkpoint_uses_filesystem_manager(spark, event_files, tmp_path):
+    """A local checkpoint's offset and commit logs are written through the
+    FileSystem-based manager; the stream's session copy carries the class
+    and the caller's session reads as it did before start()."""
+    from kafkastreamsjavachallenge_spark.streaming.sinks import for_each_batch
+
+    d, ev = event_files
+    assert spark.conf.get(MANAGER, None) is None
+    rows = []
+    q = for_each_batch(
+        streaming_unique_users(file_stream(spark, d, ev.schema), "ts", "user_id", "1 minute"),
+        lambda bdf, _: rows.extend(bdf.collect()),
+        str(tmp_path / "ckpt_fs"),
+    )
+    q.awaitTermination()
+    assert rows
+    assert _log_managers(q) == (FS_MANAGER, FS_MANAGER)
+    stream_conf = q._jsq.streamingQuery().sparkSessionForStream().conf()
+    assert stream_conf.get(MANAGER) == FS_MANAGER
+    assert spark.conf.get(MANAGER, None) is None
+
+
+def test_filecontext_checkpoint_resumes_under_filesystem_manager(
+    spark, event_files, tmp_path
+):
+    """A unique-users checkpoint written through the FileContext manager
+    (named on the session) resumes under the local FileSystem-manager rule
+    once the session drops the class, and its final counts equal those
+    of one uninterrupted run."""
+    import shutil
+
+    from kafkastreamsjavachallenge_spark.streaming.sinks import for_each_batch
+
+    d, ev = event_files
+    files = sorted(os.listdir(d))
+    src = tmp_path / "fc_src"
+    src.mkdir()
+
+    def run(path, ckpt, emitted):
+        stream = file_stream(spark, str(path), ev.schema, max_files_per_trigger=1)
+        q = for_each_batch(
+            streaming_unique_users(stream, "ts", "user_id", "1 minute"),
+            lambda bdf, _: emitted.extend(
+                (r["window_start"], r["unique_users"]) for r in bdf.collect()
+            ),
+            ckpt,
+        )
+        q.awaitTermination()
+        return _log_managers(q)
+
+    def final(emitted):
+        got: dict = {}
+        for w, n in emitted:
+            got[w] = max(got.get(w, 0), n)
+        return got
+
+    ckpt = str(tmp_path / "ckpt_fc")
+    resumed: list = []
+    for f in files[:2]:
+        shutil.copy(os.path.join(d, f), src / f)
+    spark.conf.set(MANAGER, FC_MANAGER)
+    try:
+        assert run(src, ckpt, resumed) == (FC_MANAGER, FC_MANAGER)
+    finally:
+        spark.conf.unset(MANAGER)
+    first_rows = len(resumed)
+    for f in files[2:]:
+        shutil.copy(os.path.join(d, f), src / f)
+    assert run(src, ckpt, resumed) == (FS_MANAGER, FS_MANAGER)
+    assert 0 < first_rows < len(resumed)
+
+    whole: list = []
+    run(d, str(tmp_path / "ckpt_fc_whole"), whole)
+    assert final(resumed) == final(whole)
 
 
 def test_stream_stream_join_matches_batch(spark, event_files):
