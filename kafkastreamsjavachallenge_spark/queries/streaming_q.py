@@ -26,9 +26,11 @@ from kafkastreamsjavachallenge_spark.queries.quality import (
     _P,
 )
 from kafkastreamsjavachallenge_spark.streaming.pipeline import (
+    ensure_event_time,
     file_stream,
     run_to_memory,
     stream_static_enrich,
+    stream_stream_join,
     streaming_session_counts,
     streaming_sliding_counts,
     streaming_unique_users,
@@ -194,14 +196,12 @@ def _event_stream(spark, sf_dir, horizon_sentinel=False):
     stream = file_stream(spark, stage, batch.schema)
     if dict(stream.dtypes).get("ts") == "bigint":
         stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    from kafkastreamsjavachallenge_spark.streaming.pipeline import ensure_event_time
-
     return ensure_event_time(stream, "ts")
 
 
 def q_stream_unique_users(spark, sf_dir):
     result = streaming_unique_users(_event_stream(spark, sf_dir))
-    return run_to_memory(result, output_mode="update", state_partitions=8)
+    return run_to_memory(result, output_mode="update")
 
 
 def q_stream_unique_users_append(spark, sf_dir):
@@ -213,7 +213,7 @@ def q_stream_unique_users_append(spark, sf_dir):
     exclude it by construction."""
     stream = _event_stream(spark, sf_dir, horizon_sentinel=True)
     result = streaming_unique_users(stream)
-    return run_to_memory(result, output_mode="append", state_partitions=8)
+    return run_to_memory(result, output_mode="append")
 
 
 def q_stream_enrich(spark, sf_dir):
@@ -230,14 +230,14 @@ def q_stream_enrich(spark, sf_dir):
     result = enriched.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    return run_to_memory(result, output_mode="complete", state_partitions=8)
+    return run_to_memory(result, output_mode="complete")
 
 
 def q_stream_sliding(spark, sf_dir):
     """Sliding-window streaming counts; final counts after one availableNow
     drain equal the batch sliding-window query → full SQL oracle."""
     result = streaming_sliding_counts(_event_stream(spark, sf_dir))
-    return run_to_memory(result, output_mode="update", state_partitions=8)
+    return run_to_memory(result, output_mode="update")
 
 
 def q_stream_session(spark, sf_dir):
@@ -245,7 +245,7 @@ def q_stream_session(spark, sf_dir):
     fragments, so final sessions equal the batch gap-session SQL."""
     result = streaming_session_counts(_event_stream(spark, sf_dir))
     # session-window streaming aggregation supports append/complete only
-    return run_to_memory(result, output_mode="complete", state_partitions=8)
+    return run_to_memory(result, output_mode="complete")
 
 
 def q_stream_countmin(spark, sf_dir):
@@ -279,7 +279,7 @@ def q_stream_countmin(spark, sf_dir):
         .groupBy(F.col("h.d").alias("d"), F.col("h.bucket").alias("bucket"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    return run_to_memory(cms, output_mode="complete", state_partitions=8)
+    return run_to_memory(cms, output_mode="complete")
 
 
 def q_stream_join(spark, sf_dir):
@@ -290,13 +290,6 @@ def q_stream_join(spark, sf_dir):
     One availableNow batch holds all input, so every inner match is emitted
     before shutdown → equals the batch self-join → full SQL oracle."""
     from pyspark.sql import functions as F
-
-    from kafkastreamsjavachallenge_spark.streaming.pipeline import (
-        run_to_memory as _run,
-    )
-    from kafkastreamsjavachallenge_spark.streaming.pipeline import (
-        stream_stream_join,
-    )
 
     left = _event_stream(spark, sf_dir).select("event_id", "user_id", "ts")
     right = _event_stream(spark, sf_dir).select(
@@ -313,7 +306,7 @@ def q_stream_join(spark, sf_dir):
         left, right, on, left_ts="ts", right_ts="r_ts",
         watermark="1 minute", interval="1 minute",
     )
-    pairs = _run(joined, output_mode="append", state_partitions=8)
+    pairs = run_to_memory(joined, output_mode="append")
     return pairs.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_pairs"))
 
 
@@ -328,7 +321,7 @@ def q_stream_topk(spark, sf_dir):
 
     stream = _event_stream(spark, sf_dir)
     counts = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-    out = run_to_memory(counts, output_mode="complete", state_partitions=8)
+    out = run_to_memory(counts, output_mode="complete")
     return out.orderBy(F.col("n").desc(), "user_id").limit(10)
 
 
@@ -345,7 +338,7 @@ def q_stream_dedup(spark, sf_dir):
     deduped = stream.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
         ["user_id"]
     )
-    out = run_to_memory(deduped, output_mode="append", state_partitions=8)
+    out = run_to_memory(deduped, output_mode="append")
     return out.select("user_id")
 
 
@@ -379,7 +372,7 @@ def q_stream_curation(spark, sf_dir):
     counts = deduped.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_kept_distinct")
     )
-    return run_to_memory(counts, output_mode="update", state_partitions=8)
+    return run_to_memory(counts, output_mode="update")
 
 
 def q_stream_neardup(spark, sf_dir):
@@ -417,7 +410,7 @@ def q_stream_neardup(spark, sf_dir):
     per_bucket = banded.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_id")
     )
-    out = run_to_memory(per_bucket, output_mode="complete", state_partitions=8)
+    out = run_to_memory(per_bucket, output_mode="complete")
     return out.filter(F.col("n_docs") >= 2)
 
 
@@ -431,13 +424,11 @@ def q_stream_anomaly(spark, sf_dir):
     the batch aggregate, so the full anomaly report is oracle-checked."""
     from pyspark.sql import functions as F
 
-    from kafkastreamsjavachallenge_spark.streaming.pipeline import run_to_memory
-
     stream = _event_stream(spark, sf_dir)
     daily = stream.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.count(F.lit(1)).alias("n"))
-    counts = run_to_memory(daily, output_mode="complete", state_partitions=8)
+    counts = run_to_memory(daily, output_mode="complete")
     # per-type moments as window aggregates (no self-join of the memory
     # sink view — same exprIds on both sides trip conflicting-reference
     # analysis; the window also saves the join outright)
@@ -484,7 +475,7 @@ def q_stream_ks(spark, sf_dir):
     hist = stream.groupBy("source", "n_chars").agg(
         F.count(F.lit(1)).alias("c_s")
     )
-    counts = run_to_memory(hist, output_mode="complete", state_partitions=8)
+    counts = run_to_memory(hist, output_mode="complete")
     # per-CALL unique view name (round-8 ADVICE): a per-sf_dir name let
     # two concurrent invocations on the same sf_dir race on
     # createOrReplaceTempView and read each other's drained counts
@@ -537,7 +528,7 @@ def q_stream_anomaly_sliding(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
         .select("event_type", F.col("w.start").alias("window_start"), "n")
     )
-    counts = run_to_memory(win, output_mode="append", state_partitions=8)
+    counts = run_to_memory(win, output_mode="append")
     w = Window.partitionBy("event_type")
     k = F.count(F.lit(1)).over(w)
     s = F.sum("n").over(w)
@@ -612,7 +603,7 @@ def q_stream_funnel(spark, sf_dir):
             F.when(F.col("f1") & F.col("f2") & F.col("f3"), 1).otherwise(0)
         ).alias("n3"),
     )
-    out = run_to_memory(agg, output_mode="complete", state_partitions=8)
+    out = run_to_memory(agg, output_mode="complete")
     return out.selectExpr(
         "stack(3, 'length', 1, n0, n1, 'diversity', 2, n1, n2, "
         "'top_token', 3, n2, n3) AS (stage, stage_idx, n_in, n_out)"
@@ -659,7 +650,6 @@ def q_stream_rollup(spark, sf_dir):
             F.col("n_minutes"),
         ),
         output_mode="append",
-        state_partitions=8,
     )
     return out
 

@@ -29,7 +29,6 @@ class EngineConfig:
     app_name: str = "kafkastreamsjavachallenge-spark"
     master: str | None = None  # None -> inherit / local[*]
     shuffle_partitions: int | None = None  # None -> default + AQE coalescing
-    session_timezone: str = "UTC"
     extra: dict = field(default_factory=dict)
 
 
@@ -102,15 +101,11 @@ def build_session(config: EngineConfig | None = None) -> SparkSession:
     b = (
         SparkSession.builder.appName(config.app_name)
         .master(master)
-        .config("spark.sql.session.timeZone", config.session_timezone)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
         .config("spark.ui.enabled", "false")
     )
+    for k, v in _RUNTIME_CONFS.items():
+        b = b.config(k, v)
     if config.shuffle_partitions is not None:
         b = b.config("spark.sql.shuffle.partitions", str(config.shuffle_partitions))
     for k, v in config.extra.items():

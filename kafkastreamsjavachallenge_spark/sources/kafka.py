@@ -117,7 +117,7 @@ def write_counts(
     """S2: produce (key = window-start unix-seconds string, value = count
     string) — the reference's output record shape
     (UniqueUsersApp.java:125,130,133).  The topology's state stores are
-    sized by the ``"auto"`` rule (``streaming/sinks.py _start``)."""
+    sized by the one-per-core rule (``streaming/sinks.py _start``)."""
     out = result.select(
         F.unix_timestamp("window_start").cast("string").alias("key"),
         F.col("unique_users").cast("string").alias("value"),
@@ -128,4 +128,4 @@ def write_counts(
         .option("topic", topic)
         .outputMode(output_mode)
     )
-    return _start(writer, result.sparkSession, "auto", checkpoint)
+    return _start(writer, result.sparkSession, checkpoint)

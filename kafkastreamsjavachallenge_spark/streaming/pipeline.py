@@ -183,7 +183,6 @@ def run_to_memory(
     result: DataFrame,
     output_mode: str = "update",
     query_name: str | None = None,
-    state_partitions: int | str | None = "auto",
     checkpoint: str | None = None,
 ) -> DataFrame:
     """Execute a streaming result with availableNow into a memory sink and
@@ -192,22 +191,17 @@ def run_to_memory(
     availableNow processes all currently-available input then stops —
     letting the batch-oriented harness exercise the streaming engine.
 
-    ``state_partitions`` sizes the stateful operators' state stores by the
-    rule every streaming sink shares (``streaming/sinks.py _start``):
-    ``"auto"`` (default) = ``max(8, defaultParallelism)``, one store per
-    core, so a vanilla session's 200 shuffle partitions never become 200
-    state-store commits per batch; an int pins the count; ``None``
-    inherits the live session conf.  The shuffle-partitions conf carries
-    the count only while the query starts and is restored as soon as
-    ``start()`` returns, not after the drain.
+    The stateful operators get one state store per core, the rule every
+    streaming sink shares (``streaming/sinks.py _start``), so a vanilla
+    session's 200 shuffle partitions never become 200 state-store commits
+    per batch.  The session's shuffle-partitions conf is restored as soon
+    as ``start()`` returns, not after the drain.
 
     ``checkpoint`` overrides the throwaway temp checkpoint dir — pass a
     durable location to resume across runs (production S2 path does the
     same via write_counts' checkpointLocation).
     """
-    table, _q = _drain_to_memory(
-        result, output_mode, query_name, state_partitions, checkpoint
-    )
+    table, _q = _drain_to_memory(result, output_mode, query_name, checkpoint)
     return table
 
 
@@ -215,7 +209,6 @@ def _drain_to_memory(
     result: DataFrame,
     output_mode: str,
     query_name: str | None,
-    state_partitions: int | str | None,
     checkpoint: str | None,
 ):
     """Shared drain core for run_to_memory / run_with_observed: start the
@@ -238,7 +231,7 @@ def _drain_to_memory(
             .outputMode(output_mode)
             .trigger(availableNow=True)
         )
-        q = _start(writer, spark, state_partitions, ckpt)
+        q = _start(writer, spark, ckpt)
         q.awaitTermination()
     finally:
         if throwaway:
@@ -250,7 +243,6 @@ def run_with_observed(
     result: DataFrame,
     metric_name: str,
     output_mode: str = "update",
-    state_partitions: int | str | None = "auto",
 ) -> tuple[DataFrame, list[dict]]:
     """run_to_memory plus the per-micro-batch observed metrics attached
     upstream with ``operators/observe.py with_stream_metrics``.
@@ -259,7 +251,7 @@ def run_with_observed(
     named metrics).  The metrics ride the job — no extra pass over the
     stream, and on a cluster they aggregate across executors exactly like
     any other agg."""
-    table, q = _drain_to_memory(result, output_mode, None, state_partitions, None)
+    table, q = _drain_to_memory(result, output_mode, None, None)
     observed = [
         p["observedMetrics"][metric_name]
         for p in (json.loads(pj) for pj in (pr.json for pr in q.recentProgress))

@@ -8,8 +8,7 @@ Scale notes:
   location and applies two per-query rules while ``start()`` runs.
 - State sizing: the stateful operators' stores are sized as
   ``max(8, defaultParallelism)`` (one per core) instead of the session's
-  relational shuffle setting; only ``run_to_memory`` lets the caller pick
-  another count.
+  relational shuffle setting.
 - Checkpoint writer: a checkpoint on the local file system is written
   through Spark's FileSystem-based checkpoint manager instead of the
   FileContext one.  Without the native Hadoop library every local file
@@ -61,11 +60,10 @@ def _is_local_path(spark: SparkSession, path: str) -> bool:
 def _start(
     writer: DataStreamWriter,
     spark: SparkSession,
-    state_partitions: int | str | None,
     checkpoint: str,
 ) -> StreamingQuery:
-    """Start ``writer`` checkpointed at ``checkpoint``, with its stateful
-    operators sized to ``state_partitions`` and a local checkpoint written
+    """Start ``writer`` checkpointed at ``checkpoint``, with one state store
+    per core for each stateful operator and a local checkpoint written
     through the FileSystem-based checkpoint manager.
 
     State count: a streaming query's state-store count is the
@@ -75,11 +73,10 @@ def _start(
     count).  Every micro-batch commits every store, so the count should
     track state-key cardinality × executors, not the relational shuffle
     setting (a vanilla session's 200 means 200 commits per stateful
-    operator per batch, even for tiny state).  ``"auto"`` uses
-    ``max(8, defaultParallelism)``, one store per core; an int pins the
-    count; ``None`` inherits the live conf.  Inside the stream the count
-    applies to every shuffle, including those a foreachBatch function runs
-    on its batch DataFrame.
+    operator per batch, even for tiny state).  The count is
+    ``max(8, defaultParallelism)``, one store per core.  Inside the stream
+    it applies to every shuffle, including those a foreachBatch function
+    runs on its batch DataFrame.
 
     Checkpoint manager: when ``checkpoint`` is on the local file system
     (``_is_local_path``) and the session names no manager class,
@@ -100,11 +97,9 @@ def _start(
     on the session while the stream runs see the user's settings.
     """
     writer = writer.option("checkpointLocation", checkpoint)
-    if state_partitions == "auto":
-        state_partitions = max(8, spark.sparkContext.defaultParallelism)
-    overrides = {}
-    if state_partitions is not None:
-        overrides[_SHUFFLE_PARTITIONS] = str(state_partitions)
+    overrides = {
+        _SHUFFLE_PARTITIONS: str(max(8, spark.sparkContext.defaultParallelism))
+    }
     with _START_LOCK:
         if spark.conf.get(_CHECKPOINT_MANAGER, None) is None and _is_local_path(
             spark, checkpoint
@@ -132,7 +127,7 @@ def to_parquet_files(
     available_now: bool = True,
 ):
     """File sink: append-mode parquet with optional partition columns.
-    State stores are sized by the ``"auto"`` rule (``_start``)."""
+    State stores are sized by the one-per-core rule (``_start``)."""
     w = (
         result.writeStream.format("parquet")
         .option("path", path)
@@ -142,7 +137,7 @@ def to_parquet_files(
         w = w.partitionBy(*partition_by)
     if available_now:
         w = w.trigger(availableNow=True)
-    return _start(w, result.sparkSession, "auto", checkpoint)
+    return _start(w, result.sparkSession, checkpoint)
 
 
 def for_each_batch(
@@ -154,7 +149,7 @@ def for_each_batch(
 ):
     """foreachBatch sink: ``fn(batch_df, batch_id)`` per micro-batch.
 
-    State stores are sized by the ``"auto"`` rule (``_start``).  The
+    State stores are sized by the one-per-core rule (``_start``).  The
     stream runs on the session copy ``start()`` makes, so shuffles ``fn``
     runs on ``batch_df`` also plan with that count (and, as in any Spark
     stream, without adaptive execution), not the session's
@@ -163,4 +158,4 @@ def for_each_batch(
     w = result.writeStream.foreachBatch(fn).outputMode(output_mode)
     if available_now:
         w = w.trigger(availableNow=True)
-    return _start(w, result.sparkSession, "auto", checkpoint)
+    return _start(w, result.sparkSession, checkpoint)

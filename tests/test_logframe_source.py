@@ -76,7 +76,7 @@ def test_streaming_topology_end_to_end(registered, tmp_path):
     stream = spark.readStream.format("logframes").option("path", topic).load()
     frames = parse_log_frames(stream)
     result = streaming_unique_users(frames, ts_col="ts", uid_col="uid")
-    got = run_to_memory(result, output_mode="update", state_partitions=4)
+    got = run_to_memory(result, output_mode="update")
 
     batch_frames = parse_log_frames(
         spark.read.format("logframes").option("path", topic).load()

@@ -166,7 +166,7 @@ def test_streaming_flagship_on_1m_synthetic_events(spark, tmp_path):
     t0 = time.time()
     stream = file_stream(spark, d, ev.schema, max_files_per_trigger=1)
     result = streaming_unique_users(stream, "ts", "user_id", "1 minute", "1 minute")
-    table = run_to_memory(result, output_mode="update", state_partitions=8)
+    table = run_to_memory(result, output_mode="update")
     final = table.groupBy("window_start").agg(F.max("unique_users").alias("unique_users"))
     got = {r["window_start"]: r["unique_users"] for r in final.collect()}
     elapsed = time.time() - t0

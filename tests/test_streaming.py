@@ -4,7 +4,9 @@ semantics mirror SURVEY.md §1.3.2."""
 
 from __future__ import annotations
 
+import ast
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -201,7 +203,7 @@ def test_session_shuffle_conf_restored_while_query_runs(
 def test_every_sink_starts_under_state_partition_rule(
     spark, monkeypatch, tmp_path, vanilla_shuffle
 ):
-    """All three public sinks start under the "auto" rule and the
+    """All three public sinks start under the state-count rule and the
     checkpoint-manager rule, and restore the session values after.  A
     local checkpoint starts under the FileSystem-based manager; a
     non-local one, or a session that already names a manager, starts
@@ -252,9 +254,9 @@ def test_every_sink_starts_under_state_partition_rule(
 def test_concurrent_starts_do_not_restore_each_others_conf(
     spark, monkeypatch, tmp_path, vanilla_shuffle
 ):
-    """Three threads starting queries at once: each start() sees its own
-    state count and checkpoint manager (two local checkpoints, one on
-    HDFS), and the session ends at its own values."""
+    """Three threads starting queries at once: each start() sees the state
+    count and its own checkpoint manager (two local checkpoints, one on
+    HDFS) for the whole call, and the session ends at its own values."""
     import threading
     import time as _t
 
@@ -262,7 +264,7 @@ def test_concurrent_starts_do_not_restore_each_others_conf(
 
     from kafkastreamsjavachallenge_spark.streaming.sinks import _start
 
-    seen = []
+    seen = {}
     entered = threading.Event()
 
     def live():
@@ -272,18 +274,15 @@ def test_concurrent_starts_do_not_restore_each_others_conf(
         entered.set()
         before = live()
         _t.sleep(0.2)  # widen the window a racing thread would hit
-        seen.append((before, live()))
+        seen[id(self)] = (before, live())
 
     monkeypatch.setattr(DataStreamWriter, "start", slow_start)
-    writer = spark.readStream.format("rate").load().writeStream.format("noop")
-    starts = [
-        (3, str(tmp_path / "ckpt3")),
-        (5, "hdfs://nn:8020/ckpt5"),
-        (7, str(tmp_path / "ckpt7")),
-    ]
+    ckpts = [str(tmp_path / "ckpt_a"), "hdfs://nn:8020/ckpt_b", str(tmp_path / "ckpt_c")]
+    rate = spark.readStream.format("rate").load()
+    writers = [rate.writeStream.format("noop") for _ in ckpts]
     threads = [
-        threading.Thread(target=_start, args=(writer, spark, n, ckpt))
-        for n, ckpt in starts
+        threading.Thread(target=_start, args=(w, spark, ckpt))
+        for w, ckpt in zip(writers, ckpts)
     ]
     threads[0].start()
     assert entered.wait(timeout=30)
@@ -292,19 +291,21 @@ def test_concurrent_starts_do_not_restore_each_others_conf(
     for t in threads:
         t.join(timeout=30)
     assert not any(t.is_alive() for t in threads)
-    assert sorted(seen) == [
-        (("3", FS_MANAGER),) * 2,
-        (("5", None),) * 2,
-        (("7", FS_MANAGER),) * 2,
+    auto = str(max(8, spark.sparkContext.defaultParallelism))
+    assert [seen.get(id(w)) for w in writers] == [
+        ((auto, FS_MANAGER),) * 2,
+        ((auto, None),) * 2,
+        ((auto, FS_MANAGER),) * 2,
     ]
     assert live() == ("200", None)
 
 
 def test_resume_keeps_checkpoint_state_partitions(spark, event_files, tmp_path):
-    """A for_each_batch query ("auto" = max(8, cores) stores) restarted
-    from a checkpoint created with 4 stores keeps 4 — the offset-log pin
-    wins over "auto" — and its final counts equal those of one
-    uninterrupted run."""
+    """A for_each_batch query (max(8, cores) stores) restarted from a
+    checkpoint created with 4 stores keeps 4 — the offset-log pin wins over
+    the rule — and its final counts equal those of one uninterrupted run.
+    The 4-store checkpoint comes from a plain memory-sink start on the test
+    session, whose shuffle conf is 4."""
     import shutil
 
     from kafkastreamsjavachallenge_spark.streaming.sinks import for_each_batch
@@ -336,10 +337,15 @@ def test_resume_keeps_checkpoint_state_partitions(spark, event_files, tmp_path):
     ckpt = str(tmp_path / "ckpt_resume")
     for f in files[:2]:
         shutil.copy(os.path.join(d, f), src / f)
-    first = run_to_memory(
-        result(src), output_mode="update", state_partitions=4, checkpoint=ckpt
-    )
-    resumed = [(r["window_start"], r["unique_users"]) for r in first.collect()]
+    assert spark.conf.get(SHUFFLE) == "4"
+    name = f"resume_first_{tmp_path.name}"
+    (
+        result(src).writeStream.format("memory").queryName(name)
+        .outputMode("update").trigger(availableNow=True)
+        .option("checkpointLocation", ckpt).start()
+    ).awaitTermination()
+    assert _store_dirs(ckpt, 0) == _store_dirs(ckpt, 1) == 4
+    resumed = [(r["window_start"], r["unique_users"]) for r in spark.table(name).collect()]
     for f in files[2:]:
         shutil.copy(os.path.join(d, f), src / f)
     run(src, ckpt, resumed)
@@ -348,6 +354,75 @@ def test_resume_keeps_checkpoint_state_partitions(spark, event_files, tmp_path):
     whole: list = []
     run(d, str(tmp_path / "ckpt_whole"), whole)
     assert final(resumed) == final(whole) and resumed
+
+
+def _mentions_writer(node, names) -> bool:
+    return any(
+        (isinstance(n, ast.Attribute) and n.attr == "writeStream")
+        or (isinstance(n, ast.Name) and n.id in names)
+        for n in ast.walk(node)
+    )
+
+
+def _stream_writer_starts(tree) -> dict[int, str]:
+    """Line -> enclosing function of each ``.start()``/``.toTable()`` call
+    on a stream writer: one built from ``.writeStream`` in the same
+    function (directly or through local names) or a parameter annotated
+    ``DataStreamWriter``."""
+    found = {}
+    scopes = [tree] + [
+        n for n in ast.walk(tree) if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    for scope in scopes:  # outer scopes first: inner ones overwrite
+        args = [] if isinstance(scope, ast.Module) else scope.args.args
+        names = {
+            a.arg for a in args
+            if a.annotation is not None and "DataStreamWriter" in ast.unparse(a.annotation)
+        }
+        assigns = [n for n in ast.walk(scope) if isinstance(n, ast.Assign)]
+        for _ in assigns:  # until no new writer name appears
+            new = {
+                t.id for a in assigns if _mentions_writer(a.value, names)
+                for t in a.targets if isinstance(t, ast.Name)
+            } - names
+            if not new:
+                break
+            names |= new
+        for n in ast.walk(scope):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("start", "toTable")
+                and _mentions_writer(n.func.value, names)
+            ):
+                found[n.lineno] = getattr(scope, "name", "<module>")
+    return found
+
+
+def test_streaming_queries_start_only_through_sinks_start():
+    """Every streaming query the package starts goes through
+    ``streaming/sinks.py _start``, the one place that applies the state
+    count and checkpoint-manager rules: no other module calls ``start()``
+    or ``toTable()`` on a stream writer."""
+    import kafkastreamsjavachallenge_spark as pkg
+
+    probe = ast.parse(
+        "def f(df):\n"
+        "    w = df.writeStream.format('memory')\n"
+        "    w = w.trigger(availableNow=True)\n"
+        "    return w.start()\n"
+        "def g(df):\n"
+        "    df.writeStream.toTable('t')\n"
+    )
+    assert sorted(_stream_writer_starts(probe).values()) == ["f", "g"]
+
+    root = Path(pkg.__file__).parent
+    starts = [
+        (path.relative_to(root), fn)
+        for path in sorted(root.rglob("*.py"))
+        for fn in _stream_writer_starts(ast.parse(path.read_text(), str(path))).values()
+    ]
+    assert starts == [(Path("streaming", "sinks.py"), "_start")]
 
 
 def _log_managers(q) -> tuple[str, str]:
@@ -730,7 +805,7 @@ def test_stream_curation_dedup_state_spans_batches(spark, tmp_path):
         ["source", "content_hash"]
     )
     counts = deduped.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    got = run_to_memory(counts, output_mode="update", state_partitions=8)
+    got = run_to_memory(counts, output_mode="update")
     # update mode re-emits a source's row only when its count changes;
     # take the max emitted per source = converged value
     final = {
