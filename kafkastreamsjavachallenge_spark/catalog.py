@@ -13,8 +13,8 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from kafkastreamsjavachallenge_spark.operators.windows import with_event_time
 from kafkastreamsjavachallenge_spark.session import configure_runtime
 
 TABLE_NAMES = (
@@ -74,14 +74,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table; normalizes the events timestamp to TimestampType.
 
     events.ts has shipped in two physical forms across testdata
-    generations: parquet TIMESTAMP(NANOS) read as long nanos (see
-    session._RUNTIME_CONFS nanosAsLong; convert with integer division so
-    the truncation to microseconds matches DuckDB's read of the same
-    file) and TIMESTAMP(MICROS) without a UTC annotation, which Spark 4
-    reads as TIMESTAMP_NTZ.  Both normalize to TimestampType here: the
-    session timezone is pinned UTC (configure_runtime), so the NTZ cast
-    is value-preserving vs the oracle's naive read, and downstream
-    event-time code (withWatermark, unix_micros) requires TimestampType.
+    generations, parquet TIMESTAMP(NANOS) and untagged TIMESTAMP(MICROS);
+    ``operators/windows.py with_event_time`` maps both to TimestampType.
     Large single-row-group inputs are transparently re-laid-out once per
     process (see _maybe_relayout).
     """
@@ -89,11 +83,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
     if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = with_event_time(df, "ts")
     return _maybe_relayout(spark, path, name, df)
 
 

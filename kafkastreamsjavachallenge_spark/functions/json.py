@@ -9,7 +9,7 @@ which we filter explicitly instead of sentinel empty strings.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -25,11 +25,3 @@ def parse_json(col: Column | str, schema: StructType | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.from_json(c, schema)
 
-
-def extract_and_filter(df: DataFrame, json_col: str, field: str, out: str) -> DataFrame:
-    """P1+P2 fused: extract field, drop rows where it is missing/malformed —
-    the fixed form of the reference's ""-sentinel dance
-    (UniqueUsersApp.java:212-215)."""
-    return df.withColumn(out, json_field(json_col, field)).filter(
-        F.col(out).isNotNull() & (F.col(out) != "")
-    )

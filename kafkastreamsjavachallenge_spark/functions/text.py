@@ -70,11 +70,6 @@ def shingles(toks: Column, k: int = 3) -> Column:
     )
 
 
-def seeded_md5(col: Column, seed: int) -> Column:
-    """Portable seeded hash: md5(seed || '|' || value), hex string."""
-    return F.md5(F.concat_ws("|", F.lit(str(seed)), col))
-
-
 def minhash_signature(items: Column, n_perm: int) -> Column:
     """MinHash signature as a pure projection (no shuffle): per permutation
     s, min over the item set of (A[s]*base_hash28(x) + B[s]) mod p — the
@@ -150,11 +145,6 @@ def token_fingerprint(text: Column | str) -> Column:
     """Document fingerprint: min token hash (1-perm minhash) — a cheap,
     order-insensitive content id for clustering/sharding."""
     return F.array_min(F.transform(tokens(text), lambda t: F.md5(t)))
-
-
-def char_len(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.length(F.trim(c))
 
 
 def type_token_ratio(toks: Column) -> Column:

@@ -23,19 +23,29 @@ from pyspark.sql import functions as F
 
 
 def with_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Normalize an event-time column to TimestampType.
+    """Normalize a parquet-typed event-time column to TimestampType — the
+    engine's one event-time rule, as the reference has one timestamp
+    extractor (LogFrameTimestampExtractor.java:8-14).  The catalog and
+    every stream reader go through it; ``withWatermark`` and
+    ``unix_micros`` need TimestampType.  Drops no rows.
 
-    Replaces the reference's key-based timestamp extractor
-    (LogFrameTimestampExtractor.java:8-14): we take event time from the
-    payload column and *drop* malformed rows instead of mapping them to
-    epoch 0 (SURVEY.md §1.3.3 quirk fix).
+    - ``timestamp_ntz`` (parquet TIMESTAMP without a UTC annotation):
+      cast.  The session timezone is pinned to UTC (session.py), so the
+      cast keeps the values of DuckDB's naive read of the same file.
+    - ``bigint`` (parquet TIMESTAMP(NANOS) read as long under the
+      session's ``nanosAsLong``): integer division to microseconds,
+      truncating the way DuckDB does.
+    - ``timestamp`` and every other type: the same DataFrame.
+
+    Unix-seconds JSON frames are parsed at the ingest edge
+    (sources/kafka.py ``parse_log_frames``), not here.
     """
-    dt = dict(df.dtypes)[ts_col]
-    if dt == "bigint":  # unix seconds or nanos are handled by the catalog
-        df = df.withColumn(ts_col, F.timestamp_seconds(F.col(ts_col)))
-    elif dt == "string":
-        df = df.withColumn(ts_col, F.to_timestamp(F.col(ts_col)))
-    return df.filter(F.col(ts_col).isNotNull())
+    dt = dict(df.dtypes).get(ts_col)
+    if dt == "timestamp_ntz":
+        return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    if dt == "bigint":
+        return df.withColumn(ts_col, F.expr(f"timestamp_micros({ts_col} div 1000)"))
+    return df
 
 
 def tumbling(df: DataFrame, ts_col: str, duration: str) -> DataFrame:

@@ -54,9 +54,8 @@ def q_null_filter(spark, sf_dir):
 
 # T1 — event-time extraction (LogFrameTimestampExtractor.java:8-14)
 def q_event_time(spark, sf_dir):
-    df = W.with_event_time(_events(spark, sf_dir), "ts")
     sec = F.unix_timestamp("ts")
-    return df.select(
+    return _events(spark, sf_dir).select(
         "event_id",
         sec.alias("ts_sec"),
         (F.floor(sec / 60) * 60).cast("bigint").alias("ts_minute"),

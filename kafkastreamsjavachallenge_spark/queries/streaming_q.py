@@ -18,6 +18,7 @@ tests/test_streaming.py.
 from __future__ import annotations
 
 from kafkastreamsjavachallenge_spark.catalog import load_table
+from kafkastreamsjavachallenge_spark.operators.windows import with_event_time
 from kafkastreamsjavachallenge_spark.queries.corpus import _KS_SQL
 from kafkastreamsjavachallenge_spark.queries.llm import _MINHASH_SIG_CTE
 from kafkastreamsjavachallenge_spark.queries.quality import (
@@ -26,7 +27,6 @@ from kafkastreamsjavachallenge_spark.queries.quality import (
     _P,
 )
 from kafkastreamsjavachallenge_spark.streaming.pipeline import (
-    ensure_event_time,
     file_stream,
     run_to_memory,
     stream_static_enrich,
@@ -193,10 +193,7 @@ def _event_stream(spark, sf_dir, horizon_sentinel=False):
         stage = _staged_dir(src, "sentinel", build=_write_sentinel)
     else:
         stage = _staged_dir(src)
-    stream = file_stream(spark, stage, batch.schema)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return ensure_event_time(stream, "ts")
+    return with_event_time(file_stream(spark, stage, batch.schema), "ts")
 
 
 def q_stream_unique_users(spark, sf_dir):
@@ -352,7 +349,7 @@ def q_stream_curation(spark, sf_dir):
     dropDuplicates into a stateful aggregation — the canonical
     ingest-side curation topology.  This harness run keeps dedup state
     unbounded (one availableNow batch); a production stream bounds it
-    with dropDuplicatesWithinWatermark (streaming/stateful.py)."""
+    with dropDuplicatesWithinWatermark."""
     from pyspark.sql import functions as F
 
     from kafkastreamsjavachallenge_spark.functions import text as T

@@ -10,8 +10,9 @@ Scale rationale (100 TB / 1000-executor design, tested on local[N]):
 - Session timezone pinned to UTC so event-time semantics are stable across
   engines and clusters (SURVEY.md §7.3 oracle-drift risk).
 - ``nanosAsLong`` because the synthetic events table carries parquet
-  TIMESTAMP(NANOS), which Spark's vectorized reader refuses natively; the
-  catalog converts to microsecond TimestampType at scan time.
+  TIMESTAMP(NANOS), which Spark's vectorized reader refuses natively;
+  ``operators/windows.py with_event_time`` converts it to microsecond
+  TimestampType at scan time.
 """
 
 from __future__ import annotations
@@ -36,7 +37,8 @@ class EngineConfig:
 #: session at runtime — e.g. the driver's own SparkSession.
 _RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
-    # events.parquet stores TIMESTAMP(NANOS); read as long, convert in catalog.
+    # events.parquet may store TIMESTAMP(NANOS): read as long, converted by
+    # operators/windows.py with_event_time.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",

@@ -25,22 +25,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafkastreamsjavachallenge_spark.operators.windows import with_event_time
 from kafkastreamsjavachallenge_spark.streaming.sinks import _start
-
-
-def ensure_event_time(df: DataFrame, ts_col: str) -> DataFrame:
-    """Normalize an event-time column to TimestampType for watermarking.
-
-    Parquet written without an isAdjustedToUTC annotation reads as
-    TIMESTAMP_NTZ (depending on writer/session), which
-    ``withWatermark`` rejects (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE).
-    The session timezone is pinned to UTC (session.py), so casting
-    NTZ -> TIMESTAMP is value-preserving against the naive-timestamp
-    oracle reading of the same files.
-    """
-    if dict(df.dtypes).get(ts_col) == "timestamp_ntz":
-        return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return df
 
 
 def streaming_unique_users(
@@ -69,7 +55,7 @@ def streaming_unique_users(
     re-admitting same-window duplicates whenever a window outlives the
     watermark lag (observed 2x counts on batch-boundary windows).
     """
-    stream = ensure_event_time(stream, ts_col)
+    stream = with_event_time(stream, ts_col)
     w = F.window(F.col(ts_col), duration)
     deduped = (
         stream.withWatermark(ts_col, watermark)
@@ -132,8 +118,8 @@ def stream_stream_join(
     can evict state — unbounded stream-stream joins never GC (the same
     failure mode as the reference's broken store retention, README.md:196).
     """
-    lw = ensure_event_time(left, left_ts).withWatermark(left_ts, watermark)
-    rw = ensure_event_time(right, right_ts).withWatermark(right_ts, watermark)
+    lw = with_event_time(left, left_ts).withWatermark(left_ts, watermark)
+    rw = with_event_time(right, right_ts).withWatermark(right_ts, watermark)
     bound = (
         (F.col(right_ts) >= F.col(left_ts) - F.expr(f"INTERVAL {interval}"))
         & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {interval}"))
@@ -150,7 +136,7 @@ def streaming_sliding_counts(
 ) -> DataFrame:
     """Sliding-window event counts over a stream (beyond the reference's
     tumbling-only surface, SURVEY.md §2.2)."""
-    stream = ensure_event_time(stream, ts_col)
+    stream = with_event_time(stream, ts_col)
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), duration, slide).alias("window"))
@@ -170,7 +156,7 @@ def streaming_session_counts(
     SURVEY.md §2.2; reference is tumbling-only).  The engine merges
     adjacent session fragments across micro-batches; watermark bounds the
     merge state."""
-    stream = ensure_event_time(stream, ts_col)
+    stream = with_event_time(stream, ts_col)
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.col(key), F.session_window(F.col(ts_col), gap).alias("session"))

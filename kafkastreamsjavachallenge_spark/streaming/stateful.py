@@ -6,13 +6,13 @@ dropDuplicates cannot express.
 WindowStore probe (DeduplicateValueTransformer.java:28,40-47) literally:
 explicit per-(window) state holding the set of seen uids, emitting the
 updated unique count per window on every batch — the reference's cache=0
-changelog behavior (UniqueUsersApp.java:76).  GroupWithState timeouts play
-the role of the (broken) RocksDB retention (README.md:196): state for a
-window is dropped once the timeout fires.
+changelog behavior (UniqueUsersApp.java:76).
 
-This exists to prove the custom-state surface; the production flagship
-path remains withWatermark + dropDuplicates (streaming/pipeline.py),
-which keeps state JVM-side.
+This exists to prove the custom-state surface; no query, sink or
+benchmark runs it.  It has no watermark, so it counts far-late frames the
+flagship drops and never evicts a window's state.  The production
+flagship path remains withWatermark + dropDuplicates
+(streaming/pipeline.py), which keeps state JVM-side and bounded.
 """
 
 from __future__ import annotations
@@ -23,7 +23,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
     LongType,
+    StringType,
     StructField,
     StructType,
     TimestampType,
@@ -35,94 +37,18 @@ OUTPUT_SCHEMA = StructType(
         StructField("unique_users", LongType()),
     ]
 )
-
-def _make_dedup_fn(retention_ms: int | None):
-    def _dedup_fn(key, pdfs: Iterator, state: GroupState):
-        import pandas as pd
-
-        (window_start,) = key
-        if state.hasTimedOut:
-            state.remove()  # retention fired: evict the window's uid set
-            return
-        seen = set(state.get[0]) if state.exists else set()
-        for pdf in pdfs:
-            seen.update(pdf["uid"].astype(str))
-        state.update((list(seen),))
-        if retention_ms is not None:
-            state.setTimeoutDuration(retention_ms)
-        yield pd.DataFrame(
-            {"window_start": [window_start], "unique_users": [len(seen)]}
-        )
-
-    return _dedup_fn
+STATE_SCHEMA = StructType([StructField("uids", ArrayType(StringType()))])
 
 
-def tws_windowed_dedup_counts(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    uid_col: str = "user_id",
-    duration: str = "1 minute",
-) -> DataFrame:
-    """Unique-uid count per tumbling window on the transformWithState API
-    (Spark 4's arbitrary-stateful-processing surface, the successor of
-    applyInPandasWithState): explicit ListState of seen uids per window
-    key, updated per batch, emitting the running count — the reference's
-    WindowStore probe (DeduplicateValueTransformer.java:40-47) expressed
-    on the modern state API.
-
-    Requires the ``protobuf`` Python package (the TWS driver worker's
-    state-serialization dependency) and the RocksDB state store provider;
-    raises ImportError with guidance when protobuf is absent — the
-    applyInPandasWithState form above has no such dependency.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(pip install protobuf); use stateful_windowed_dedup_counts "
-            "(applyInPandasWithState) where it is unavailable"
-        ) from e
+def _dedup_fn(key, pdfs: Iterator, state: GroupState):
     import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
-    class UniqueUid(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getListState("seen", "uid string")
-
-        def handleInputRows(self, key, rows, timerValues):
-            (window_start,) = key
-            seen = {r[0] for r in self._seen.get()}
-            for pdf in rows:
-                seen.update(pdf["uid"].astype(str))
-            self._seen.put([(u,) for u in sorted(seen)])
-            yield pd.DataFrame(
-                {"window_start": [window_start], "unique_users": [len(seen)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    # transformWithState requires the RocksDB state store provider (a
-    # documented constraint of the API); the conf is read at query start.
-    spark = stream.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    keyed = stream.select(
-        F.window(F.col(ts_col), duration).getField("start").alias("window_start"),
-        F.col(uid_col).cast("string").alias("uid"),
-    )
-    return keyed.groupBy("window_start").transformWithStateInPandas(
-        UniqueUid(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
+    (window_start,) = key
+    seen = set(state.get[0]) if state.exists else set()
+    for pdf in pdfs:
+        seen.update(pdf["uid"].astype(str))
+    state.update((list(seen),))
+    yield pd.DataFrame({"window_start": [window_start], "unique_users": [len(seen)]})
 
 
 def stateful_windowed_dedup_counts(
@@ -130,35 +56,20 @@ def stateful_windowed_dedup_counts(
     ts_col: str = "ts",
     uid_col: str = "user_id",
     duration: str = "1 minute",
-    retention_ms: int | None = None,
 ) -> DataFrame:
     """Unique-uid count per tumbling window with explicit set state.
 
     Shuffles on window_start (the state key) — the same partitioning the
     reference achieved with producer-side minute keys (README.md:90-105).
-
-    ``retention_ms`` arms a processing-time timeout that evicts a window's
-    state (the working version of the reference's broken RocksDB retention,
-    README.md:196).  Leave ``None`` for unbounded state / no-timeout runs —
-    note an armed timeout keeps an availableNow drain re-triggering empty
-    micro-batches until it fires, so batch-style harness runs want ``None``.
     """
-    from pyspark.sql.types import ArrayType, StringType
-
-    state_schema = StructType([StructField("uids", ArrayType(StringType()))])
     keyed = stream.select(
         F.window(F.col(ts_col), duration).getField("start").alias("window_start"),
         F.col(uid_col).cast("string").alias("uid"),
     )
-    timeout_conf = (
-        GroupStateTimeout.NoTimeout
-        if retention_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
     return keyed.groupBy("window_start").applyInPandasWithState(
-        _make_dedup_fn(retention_ms),
+        _dedup_fn,
         outputStructType=OUTPUT_SCHEMA,
-        stateStructType=state_schema,
+        stateStructType=STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=timeout_conf,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

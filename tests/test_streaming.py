@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafkastreamsjavachallenge_spark.catalog import load_table
-from kafkastreamsjavachallenge_spark.operators.windows import unique_users
+from kafkastreamsjavachallenge_spark.operators.windows import unique_users, with_event_time
 from kafkastreamsjavachallenge_spark.streaming.pipeline import (
     file_stream,
     run_to_memory,
@@ -423,6 +423,32 @@ def test_streaming_queries_start_only_through_sinks_start():
         for fn in _stream_writer_starts(ast.parse(path.read_text(), str(path))).values()
     ]
     assert starts == [(Path("streaming", "sinks.py"), "_start")]
+
+
+def test_event_time_types_are_normalised_only_in_with_event_time():
+    """The package has one event-time rule: ``timestamp_ntz`` and
+    ``timestamp_micros`` (the two parquet event-time types it converts)
+    appear only inside ``operators/windows.py with_event_time``, so the
+    catalog and the stream readers cannot grow a copy that disagrees."""
+    import re
+
+    import kafkastreamsjavachallenge_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    windows = root / "operators" / "windows.py"
+    rule = next(
+        n for n in ast.parse(windows.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "with_event_time"
+    )
+    token = re.compile(r"timestamp_(ntz|micros)", re.IGNORECASE)
+    outside = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if token.search(line)
+        and not (path == windows and rule.lineno <= i <= rule.end_lineno)
+    ]
+    assert outside == []
 
 
 def _log_managers(q) -> tuple[str, str]:
@@ -979,12 +1005,8 @@ def test_stream_sliding_anomaly_multibatch_append_finals(spark, event_files):
     the batch sliding expansion, nothing is emitted twice, and the
     un-emitted windows are exactly the open tail the watermark never
     passed."""
-    from kafkastreamsjavachallenge_spark.streaming.pipeline import (
-        ensure_event_time,
-    )
-
     d, ev = event_files
-    stream = ensure_event_time(
+    stream = with_event_time(
         file_stream(spark, d, ev.schema, max_files_per_trigger=1), "ts"
     )
     win = (
@@ -1030,16 +1052,12 @@ def test_sliding_window_append_checkpoint_recovery(spark, event_files, tmp_path)
     batch sliding expansion."""
     import time as _t
 
-    from kafkastreamsjavachallenge_spark.streaming.pipeline import (
-        ensure_event_time,
-    )
-
     d, ev = event_files
     ckpt = str(tmp_path / "ckpt_sliding")
     emitted: list[tuple] = []
 
     def start():
-        stream = ensure_event_time(
+        stream = with_event_time(
             file_stream(spark, d, ev.schema, max_files_per_trigger=1), "ts"
         )
         win = (

@@ -112,3 +112,67 @@ def test_text_and_vector_queries_survive_physical_drift(spark, text_drifted_dir)
     ]:
         fn, _ = reg[name]
         assert fn(spark, text_drifted_dir).count() >= 0, name
+
+
+EVENT_TIME_QUERIES = ("q_unique_users", "q_event_time", "q_stream_unique_users")
+
+
+def _rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.fixture(scope="module")
+def event_time_rows(spark):
+    """Rows of the event-time queries on the untouched sf0.001."""
+    from kafkastreamsjavachallenge_spark.queries import queries
+
+    qs = queries()
+    return {name: _rows(qs[name](spark, SF_DIR)) for name in EVENT_TIME_QUERIES}
+
+
+@pytest.mark.parametrize("ts_unit", ["us", "ns"])
+def test_event_time_queries_equal_under_events_ts_drift(spark, ts_unit, event_time_rows):
+    """Both shipped drifts of events.ts give the rows of the untouched
+    table, through the catalog (q_unique_users, q_event_time) and through
+    the file stream (q_stream_unique_users): one event-time rule on both
+    paths."""
+    from kafkastreamsjavachallenge_spark.queries import queries
+
+    sf_dir = _drifted_dir(ts_unit)
+    qs = queries()
+    try:
+        got = {name: _rows(qs[name](spark, sf_dir)) for name in EVENT_TIME_QUERIES}
+    finally:
+        shutil.rmtree(sf_dir, ignore_errors=True)
+    for name in EVENT_TIME_QUERIES:
+        assert got[name] == event_time_rows[name], name
+
+
+def test_event_time_keeps_null_ts_rows_like_its_oracle(spark, tmp_path):
+    """q_event_time keeps a row whose ts is null, as its DuckDB oracle
+    does: the event-time rule converts types and drops no rows."""
+    import duckdb
+
+    from kafkastreamsjavachallenge_spark.queries import oracle_sql, queries
+
+    t = pq.read_table(os.path.join(SF_DIR, "events.parquet")).slice(0, 5)
+    field = t.schema.field("ts")
+    ts = t.column("ts").to_pylist()
+    ts[2] = None
+    t = t.set_column(t.schema.get_field_index("ts"), field, pa.array(ts, field.type))
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(t, path)
+
+    df = queries()["q_event_time"](spark, str(tmp_path))
+    got = _rows(df)
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+        res = con.execute(oracle_sql()["q_event_time"])
+        want_cols = [d[0] for d in res.description]
+        want = sorted(res.fetchall(), key=repr)
+    finally:
+        con.close()
+    assert df.columns == want_cols
+    assert len(want) == 5
+    assert got == want
