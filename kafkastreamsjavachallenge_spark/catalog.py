@@ -9,13 +9,10 @@ change.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
 from kafkastreamsjavachallenge_spark.operators.windows import with_event_time
-from kafkastreamsjavachallenge_spark.session import configure_runtime
+from kafkastreamsjavachallenge_spark.session import configure_runtime, derived_dir
 
 TABLE_NAMES = (
     "region",
@@ -33,40 +30,30 @@ TABLE_NAMES = (
 # Ingest-time layout repair (auto-OPTIMIZE): a parquet input whose row-group
 # count is far below the available parallelism serializes every scan — one
 # task per row group, however many cores exist.  Tables above this row
-# threshold are rewritten ONCE per process into a spark-parallelism-matched
-# multi-file copy under a session temp dir; every later scan of the table is
-# fully parallel.  This is the standard big-data ingest step (compaction /
-# OPTIMIZE), applied in the opposite direction: splitting an unsplittable
-# monolith instead of merging small files (sources/writers.py `compact`).
+# threshold are rewritten into a spark-parallelism-matched multi-file copy,
+# once per process and source identity (``session.derived_dir``); every later
+# scan of the table is fully parallel.  This is the standard big-data ingest
+# step (compaction / OPTIMIZE), applied in the opposite direction: splitting
+# an unsplittable monolith instead of merging small files
+# (sources/writers.py `compact`).
 _RELAYOUT_MIN_ROWS = 100_000
-_relayout_cache: dict[tuple[str, str], str] = {}
-_relayout_dir: str | None = None
 
 
 def _maybe_relayout(spark: SparkSession, path: str, name: str, df: DataFrame) -> DataFrame:
-    global _relayout_dir
-    key = (path, name)
-    cached = _relayout_cache.get(key)
-    if cached is not None:
-        return spark.read.parquet(cached) if cached else df
     try:
         import pyarrow.parquet as pq
 
         meta = pq.ParquetFile(path).metadata
         rows, groups = meta.num_rows, meta.num_row_groups
     except Exception:
-        _relayout_cache[key] = ""
         return df
     par = spark.sparkContext.defaultParallelism
     if rows < _RELAYOUT_MIN_ROWS or groups >= par // 2:
-        _relayout_cache[key] = ""
         return df
-    if _relayout_dir is None:
-        _relayout_dir = tempfile.mkdtemp(prefix="engine_relayout_")
-    out = os.path.join(_relayout_dir, f"{abs(hash(path))}_{name}")
     n = max(2, min(par, rows // 20_000 + 1))
-    df.repartition(n).write.mode("overwrite").parquet(out)
-    _relayout_cache[key] = out
+    out = derived_dir(
+        path, name, lambda d: df.repartition(n).write.mode("overwrite").parquet(d)
+    )
     return spark.read.parquet(out)
 
 
@@ -77,7 +64,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     generations, parquet TIMESTAMP(NANOS) and untagged TIMESTAMP(MICROS);
     ``operators/windows.py with_event_time`` maps both to TimestampType.
     Large single-row-group inputs are transparently re-laid-out once per
-    process (see _maybe_relayout).
+    process and source identity (see _maybe_relayout).
     """
     configure_runtime(spark)
     path = f"{sf_dir}/{name}.parquet"

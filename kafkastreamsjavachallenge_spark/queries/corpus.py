@@ -22,6 +22,7 @@ from kafkastreamsjavachallenge_spark.functions import text as T
 from kafkastreamsjavachallenge_spark.functions.vector import dot, norm
 from kafkastreamsjavachallenge_spark.operators import dedup as D
 from kafkastreamsjavachallenge_spark.operators import similarity as S
+from kafkastreamsjavachallenge_spark.session import scratch_dir
 
 
 def _docs(spark, sf_dir):
@@ -1166,10 +1167,8 @@ def q_incremental_dedup(spark, sf_dir):
     actually round-trips the index through the partitioned layout.
     Pruning itself is pinned in tests/test_plans.py
     ::test_band_index_probe_prunes_directories."""
-    import tempfile
-
     d = _docs(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="band_index_") + "/idx"
+    path = scratch_dir("band_index_") + "/idx"
     D.write_band_index(d.filter(F.col("doc_id") % 5 != 0), path)
     kept = D.dedup_against_band_index(
         d.filter(F.col("doc_id") % 5 == 0), spark, path

@@ -17,6 +17,8 @@ tests/test_streaming.py.
 
 from __future__ import annotations
 
+import os
+
 from kafkastreamsjavachallenge_spark.catalog import load_table
 from kafkastreamsjavachallenge_spark.operators.windows import with_event_time
 from kafkastreamsjavachallenge_spark.queries.corpus import _KS_SQL
@@ -26,6 +28,7 @@ from kafkastreamsjavachallenge_spark.queries.quality import (
     _CMS_W,
     _P,
 )
+from kafkastreamsjavachallenge_spark.session import configure_runtime, derived_dir
 from kafkastreamsjavachallenge_spark.streaming.pipeline import (
     file_stream,
     run_to_memory,
@@ -38,122 +41,25 @@ from kafkastreamsjavachallenge_spark.streaming.pipeline import (
 from kafkastreamsjavachallenge_spark.streaming.sinks import for_each_batch
 
 
-def _user_root(name: str) -> str:
-    """Per-user cache root under the temp dir (round-8 ADVICE): the uid
-    suffix keeps users from colliding on one world-predictable path, and
-    the ownership check refuses a root pre-created by ANOTHER user — a
-    poisoned ``_READY`` dir there would otherwise be served silently as
-    stream input, and a foreign 0700 dir would surface as a confusing
-    EACCES instead of this explicit error."""
-    import os
-    import tempfile
-
-    root = os.path.join(tempfile.gettempdir(), f"{name}_{os.getuid()}")
-    os.makedirs(root, mode=0o700, exist_ok=True)
-    st = os.stat(root)
-    if st.st_uid != os.getuid():
-        raise RuntimeError(
-            f"cache root {root} is owned by uid {st.st_uid}, not "
-            f"{os.getuid()} — refusing to trust its contents"
-        )
-    return root
+def _link_source(src: str, stage: str) -> None:
+    """Stage ``src`` by symlink: the file stream source reads a directory,
+    and testdata is read-only, so no data is copied."""
+    os.symlink(src, os.path.join(stage, "part-00000.parquet"))
 
 
-def _staged_dir(src: str, variant: str = "plain", build=None, link_src: bool = True) -> str:
-    """Deterministic per-(source, variant) staging directory for the file
-    stream source (it requires a DIRECTORY; testdata is read-only, so the
-    plain variant holds one symlink — no data is copied).  The path is
-    derived from the source realpath, so repeated bench/driver-loop
-    invocations REUSE one dir per source instead of leaking a fresh
-    ``mkdtemp`` each call (round-7 ADVICE).  Built under a dot-prefixed
-    tmp and published with an atomic rename after a ``_READY`` marker
-    lands, so concurrent callers either win the rename or reuse the
-    winner's complete dir — never read a half-built one.  ``build(tmp)``
-    lets callers add derived files (the horizon sentinel) before
-    publication.
-
-    Layout is TWO-level — ``<root>/<sha1(src|variant)[:8]>/<sha1(size|
-    mtime)[:8]>`` — so a source's identity generations are siblings: test
-    tables are REGENERATED at the same path between driver rounds, and a
-    stale generation would otherwise keep serving a sentinel derived
-    from the old data (whose event time may sit below the new corpus
-    horizon, silently breaking append-mode suppression).  On publish,
-    SUPERSEDED sibling generations are swept (round-8 ADVICE: the split3
-    variant writes full parquet copies, so un-GC'd generations were an
-    unbounded data-copy leak across driver rounds)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    st = os.stat(src)
-    src_key = hashlib.sha1(f"{src}|{variant}".encode()).hexdigest()[:8]
-    ident = hashlib.sha1(f"{st.st_size}|{st.st_mtime_ns}".encode()).hexdigest()[:8]
-    srcdir = os.path.join(_user_root("ksjc_stage"), src_key)
-    final = os.path.join(srcdir, ident)
-    if os.path.exists(os.path.join(final, "_READY")):
-        if os.stat(final).st_uid != os.getuid():  # foreign publish
-            raise RuntimeError(f"staged dir {final} owned by another uid")
-        return final
-    os.makedirs(srcdir, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix=f".{ident}.", dir=srcdir)
-    try:
-        if link_src:
-            os.symlink(src, os.path.join(tmp, "part-00000.parquet"))
-        if build is not None:
-            build(tmp)
-        with open(os.path.join(tmp, "_READY"), "w"):
-            pass
-        os.rename(tmp, final)
-    except OSError:
-        # either the publish race was lost (another caller renamed
-        # first) or something real failed — in both cases drop our
-        # staging dir so failed builds never accrete under /tmp, then
-        # require a complete published dir to exist before returning
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(final, "_READY")):
-            raise
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)  # build() blew up
-        raise
-    _sweep_superseded(srcdir, keep=ident)
-    return final
-
-
-def _sweep_superseded(srcdir: str, keep: str) -> None:
-    """Remove sibling generations of ``srcdir`` other than ``keep``: the
-    source was regenerated, so prior (size, mtime) identities can never
-    be requested again.  Dot-prefixed in-flight build dirs are left for
-    their owners except stale ones (mtime > 1 h — a crashed build)."""
-    import os
-    import shutil
-    import time as _time
-
-    try:
-        entries = os.listdir(srcdir)
-    except OSError:
-        return
-    for d in entries:
-        p = os.path.join(srcdir, d)
-        if d == keep:
-            continue
-        if d.startswith("."):
-            try:
-                stale = _time.time() - os.path.getmtime(p) > 3600
-            except OSError:
-                continue
-            if not stale:
-                continue
-        shutil.rmtree(p, ignore_errors=True)
+def _staged_dir(src: str, variant: str = "plain", build=None) -> str:
+    """Staging directory for the file stream source, built once per
+    (source, variant) and source identity under the process scratch root
+    (``session.derived_dir``): repeated calls reuse it, and a source
+    regenerated in place gets a fresh one, so a sentinel derived from old
+    data is never served.  The plain variant holds one symlink to the
+    source; ``build(dir)`` makes any other variant."""
+    return derived_dir(src, variant, build or (lambda d: _link_source(src, d)))
 
 
 def _staged_docs_stream(spark, sf_dir):
-    """documents.parquet as a file micro-batch stream via the shared
-    deterministic staging dir."""
-    import os
-
-    from kafkastreamsjavachallenge_spark.session import configure_runtime
-
+    """documents.parquet as a file micro-batch stream via its staging
+    dir."""
     configure_runtime(spark)
     src = os.path.realpath(f"{sf_dir}/documents.parquet")
     stage = _staged_dir(src)
@@ -162,11 +68,7 @@ def _staged_docs_stream(spark, sf_dir):
 
 
 def _event_stream(spark, sf_dir, horizon_sentinel=False):
-    import os
-
     from pyspark.sql import functions as F
-
-    from kafkastreamsjavachallenge_spark.session import configure_runtime
 
     configure_runtime(spark)  # nanosAsLong etc. — vanilla driver sessions
     src = os.path.realpath(f"{sf_dir}/events.parquet")
@@ -181,6 +83,7 @@ def _event_stream(spark, sf_dir, horizon_sentinel=False):
         # under test.  Derived from the latest real row so its schema
         # (incl. nanos-as-bigint drift) matches the source bit-for-bit.
         def _write_sentinel(tmp_dir: str) -> None:
+            _link_source(src, tmp_dir)
             last = batch.orderBy(F.desc("ts")).limit(1)
             if dict(batch.dtypes).get("ts") == "bigint":  # nanos drift
                 sent = last.withColumn("ts", F.col("ts") + F.lit(600_000_000_000))
@@ -473,7 +376,7 @@ def q_stream_ks(spark, sf_dir):
         F.count(F.lit(1)).alias("c_s")
     )
     counts = run_to_memory(hist, output_mode="complete")
-    # per-CALL unique view name (round-8 ADVICE): a per-sf_dir name let
+    # per-CALL unique view name: a per-sf_dir name would let
     # two concurrent invocations on the same sf_dir race on
     # createOrReplaceTempView and read each other's drained counts
     import uuid
@@ -676,14 +579,12 @@ def q_stream_incremental_dedup(spark, sf_dir):
     so the kept-set is evaluated exactly once (re-evaluating it after
     the append would see the batch's own bands and self-collide)."""
     import glob
-    import os
     import shutil
     import time as _time
 
     from pyspark.sql import functions as F
 
     from kafkastreamsjavachallenge_spark.operators import dedup as D
-    from kafkastreamsjavachallenge_spark.session import configure_runtime
 
     configure_runtime(spark)
     src = os.path.realpath(f"{sf_dir}/documents.parquet")
@@ -708,18 +609,11 @@ def q_stream_incremental_dedup(spark, sf_dir):
             # would otherwise tie-break on path only)
             os.utime(dst, (now + i, now + i))
 
-    stage = _staged_dir(src, "split3", build=_split, link_src=False)
-    # work dirs mirror the stage's two-level (source, generation) layout
-    # so regenerated testdata sweeps the prior generation's index/store
-    # alongside its stage dir (round-8 ADVICE: these held O(corpus)
-    # band-index files and would otherwise accrete across driver rounds)
-    wsrc = os.path.join(
-        _user_root("ksjc_work"), os.path.basename(os.path.dirname(stage))
-    )
-    work = os.path.join(wsrc, os.path.basename(stage))
-    shutil.rmtree(work, ignore_errors=True)  # fresh index/store per call
+    stage = _staged_dir(src, "split3", build=_split)
+    # one work dir per staged source, emptied per call: a fresh index/store
+    work = derived_dir(src, "split3_work", lambda d: None)
+    shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
-    _sweep_superseded(wsrc, keep=os.path.basename(stage))
     idx = os.path.join(work, "band_index")
     store = os.path.join(work, "kept")
     schema = spark.read.parquet(src).schema

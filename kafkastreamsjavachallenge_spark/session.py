@@ -17,7 +17,11 @@ Scale rationale (100 TB / 1000-executor design, tested on local[N]):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -61,6 +65,62 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # non-runtime-settable on this build; builder path covers it
     return spark
+
+
+# Scratch space: every directory the engine writes for itself (staged stream
+# sources, relaid-out tables, band indexes, throwaway checkpoints) lives under
+# one private root per process (mode 0700, unpredictable name), made on first
+# use and removed at interpreter exit by the process that made it, so a forked
+# child that exits cannot delete its parent's files.  Process scope, not
+# session scope: query results read these files lazily.
+_scratch_lock = threading.Lock()
+_scratch_root: str | None = None
+_derived: dict[tuple[str, str], tuple[tuple[int, int], str]] = {}
+_derived_locks: dict[tuple[str, str], threading.Lock] = {}
+
+
+def _remove_scratch_root(root: str, owner_pid: int) -> None:
+    if os.getpid() == owner_pid:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh, empty directory under this process's scratch root."""
+    global _scratch_root
+    with _scratch_lock:
+        if _scratch_root is None:
+            _scratch_root = tempfile.mkdtemp(prefix="ksjc_scratch_")
+            atexit.register(_remove_scratch_root, _scratch_root, os.getpid())
+        root = _scratch_root
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
+def derived_dir(src: str, variant: str, build) -> str:
+    """A scratch directory that ``build(dir)`` filled from ``src``, built
+    once per ``(src, variant)`` and source identity ``(st_size,
+    st_mtime_ns)``: a source rewritten in place gets a fresh copy and the
+    superseded one is removed.  A failed build removes its directory and
+    re-raises.  Concurrent callers of one key wait for a single build;
+    ``build`` may itself call ``scratch_dir``."""
+    st = os.stat(src)
+    ident = (st.st_size, st.st_mtime_ns)
+    key = (src, variant)
+    with _scratch_lock:
+        key_lock = _derived_locks.setdefault(key, threading.Lock())
+    with key_lock:
+        cached = _derived.get(key)
+        if cached is not None and cached[0] == ident:
+            return cached[1]
+        out = scratch_dir(f"{variant}_")
+        try:
+            build(out)
+        except BaseException:
+            shutil.rmtree(out, ignore_errors=True)
+            raise
+        _derived[key] = (ident, out)
+    if cached is not None:
+        shutil.rmtree(cached[1], ignore_errors=True)
+    return out
 
 
 def enable_runtime_filters(

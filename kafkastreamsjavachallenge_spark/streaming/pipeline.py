@@ -19,13 +19,13 @@ WindowStore probe at DeduplicateValueTransformer.java:40-44.
 from __future__ import annotations
 
 import json
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafkastreamsjavachallenge_spark.operators.windows import with_event_time
+from kafkastreamsjavachallenge_spark.session import scratch_dir
 from kafkastreamsjavachallenge_spark.streaming.sinks import _start
 
 
@@ -209,7 +209,7 @@ def _drain_to_memory(
     spark = result.sparkSession
     name = query_name or f"q_{uuid.uuid4().hex[:8]}"
     throwaway = checkpoint is None
-    ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
+    ckpt = checkpoint or scratch_dir("ckpt_")
     try:
         writer = (
             result.writeStream.format("memory")

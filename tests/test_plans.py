@@ -217,6 +217,16 @@ def test_relayout_parallelizes_single_row_group_input(spark, tmp_path):
     # small tables are left untouched
     pq.write_table(pa.table({"k": [1, 2, 3]}), str(tmp_path / "small.parquet"))
     assert catalog.load_table(spark, str(tmp_path), "small").count() == 3
+    # a table rewritten in place is relaid out afresh, not served stale
+    assert df.agg(F.sum("k")).first()[0] == n * (n - 1) // 2
+    pq.write_table(
+        pa.table({"k": [7] * n, "v": [0.0] * n}),
+        str(tmp_path / "big.parquet"),
+        row_group_size=n,
+    )
+    rewritten = catalog.load_table(spark, str(tmp_path), "big")
+    assert rewritten.rdd.getNumPartitions() > 1
+    assert rewritten.agg(F.sum("k")).first()[0] == 7 * n
 
 
 def test_registry_plans_lint_clean(spark):

@@ -451,6 +451,34 @@ def test_event_time_types_are_normalised_only_in_with_event_time():
     assert outside == []
 
 
+def test_scratch_space_has_one_owner():
+    """The package makes temp directories in one place: ``mkdtemp``,
+    ``gettempdir``, ``TemporaryDirectory`` and ``NamedTemporaryFile``
+    appear only inside the scratch owner in ``session.py`` (``scratch_dir``
+    and ``derived_dir``), so every scratch file lives under the private
+    process root that is removed at exit."""
+    import re
+
+    import kafkastreamsjavachallenge_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    session = root / "session.py"
+    owner = [
+        n for n in ast.parse(session.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name in ("scratch_dir", "derived_dir")
+    ]
+    token = re.compile(r"mkdtemp|gettempdir|TemporaryDirectory|NamedTemporaryFile")
+    outside = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if token.search(line)
+        and not (path == session and any(f.lineno <= i <= f.end_lineno for f in owner))
+    ]
+    assert outside == []
+    assert len(owner) == 2
+
+
 def _log_managers(q) -> tuple[str, str]:
     """Checkpoint manager classes of a query's offset and commit logs."""
     sq = q._jsq.streamingQuery()
@@ -1111,13 +1139,14 @@ def test_sliding_window_append_checkpoint_recovery(spark, event_files, tmp_path)
 
 
 def test_staged_dir_reuse_failure_and_regeneration(spark, tmp_path):
-    """The deterministic stream-staging cache (round-8 ADVICE fix):
-    (a) same source -> same dir, no new dirs per call; (b) a build()
-    failure cleans its staging dir and leaves nothing half-published;
-    (c) regenerating the source IN PLACE (new size/mtime) publishes a
-    FRESH dir instead of serving the stale cached one — the
-    cross-round testdata-regeneration hazard."""
+    """The stream-staging cache: (a) same source -> same dir, no new dirs
+    per call; (b) a build() failure removes its directory and leaves
+    nothing behind; (c) regenerating the source IN PLACE (new size/mtime)
+    builds a FRESH dir instead of serving the stale cached one, and removes
+    the superseded one; (d) the stage lies under the process scratch root,
+    which is private (0700) and owned by us."""
     import os
+    import stat
 
     from kafkastreamsjavachallenge_spark.queries.streaming_q import _staged_dir
 
@@ -1129,7 +1158,6 @@ def test_staged_dir_reuse_failure_and_regeneration(spark, tmp_path):
     d2 = _staged_dir(src, "t_reuse")
     assert d1 == d2
     assert os.path.islink(os.path.join(d1, "part-00000.parquet"))
-    assert os.path.exists(os.path.join(d1, "_READY"))
 
     stage_root = os.path.dirname(d1)
     before = set(os.listdir(stage_root))
@@ -1145,20 +1173,21 @@ def test_staged_dir_reuse_failure_and_regeneration(spark, tmp_path):
     after = set(os.listdir(stage_root))
     assert after == before, f"failed build leaked staging dirs: {after - before}"
 
-    # in-place regeneration: new content identity -> new staging dir,
-    # and the SUPERSEDED generation is swept on publish (round-8 ADVICE:
-    # full-copy variants otherwise accrete one corpus copy per driver
-    # round) — generations are siblings under the per-(src,variant) dir
+    # in-place regeneration: new content identity -> new staging dir, and
+    # the superseded one is removed
     with open(src, "wb") as f:
         f.write(b"PAR1regenerated-longer-body")
     os.utime(src, (1, 1))  # force a distinct mtime_ns deterministically
     d3 = _staged_dir(src, "t_reuse")
     assert d3 != d1, "stale staging dir served after source regeneration"
-    assert os.path.exists(os.path.join(d3, "_READY"))
-    assert os.path.dirname(d3) == stage_root  # same (src, variant) parent
-    assert not os.path.exists(d1), "superseded generation not swept"
+    assert os.path.islink(os.path.join(d3, "part-00000.parquet"))
+    assert os.path.dirname(d3) == stage_root
+    assert not os.path.exists(d1), "superseded staging dir not removed"
 
-    # the cache root is namespaced per uid and owned by us
-    root = os.path.dirname(stage_root)
-    assert root.endswith(f"_{os.getuid()}")
-    assert os.stat(root).st_uid == os.getuid()
+    # the stage lies under the process scratch root: private and ours
+    from kafkastreamsjavachallenge_spark import session
+
+    assert stage_root == session._scratch_root
+    st = os.stat(stage_root)
+    assert stat.S_IMODE(st.st_mode) == 0o700
+    assert st.st_uid == os.getuid()
