@@ -1376,16 +1376,13 @@ def test_lsh_max_bucket_cap_returns_subset(spark):
     assert not any(a < 20 and b < 20 for a, b in capped)
 
 
-def test_edit_distance_cap_agrees_below_threshold(spark):
+def test_edit_distance_cap_agrees_below_threshold(spark, tmp_path):
     """q_edit_distance(distance_cap=k): pairs within the cap report the
     exact distance; pairs beyond report dist=max_len / sim_bp=0 — the
     banded-DP scale config changes far pairs only."""
     from kafkastreamsjavachallenge_spark.queries.llm import q_edit_distance
 
-    import os
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="edcap_")
+    d = str(tmp_path)
     near = "x" * 400
     rows = [
         Row(doc_id=0, text=near),
@@ -1394,7 +1391,7 @@ def test_edit_distance_cap_agrees_below_threshold(spark):
         Row(doc_id=3, text="z" * 400 + " " + near),  # far from the others
     ]
     spark.createDataFrame(rows).write.mode("overwrite").parquet(
-        os.path.join(d, "documents.parquet")
+        str(tmp_path / "documents.parquet")
     )
     exact = {
         (r["id_a"], r["id_b"]): (r["dist"], r["sim_bp"])

@@ -888,7 +888,7 @@ def test_cap_domains_scaled_on_hot_domain(spark):
     assert got_hot == want_hot
 
 
-def test_fasttext_margin_on_1m_docs(spark):
+def test_fasttext_margin_on_1m_docs(spark, tmp_path):
     """1M synthetic two-bigram docs: classifier inference must stay
     scan-linear (< 60 s wall) and the margins admit a closed form — every
     doc is 'a b c', so each doc's margin is the same two-bigram sum, and
@@ -908,9 +908,8 @@ def test_fasttext_margin_on_1m_docs(spark):
             F.lit(5).alias("n_chars"),
         )
     )
-    import tempfile, os
-    d = tempfile.mkdtemp(prefix="ft_scale_")
-    docs.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
+    d = str(tmp_path)
+    docs.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
     t0 = time.time()
     got = q_fasttext_score(spark, d)
     agg = got.groupBy("margin", "keep", "n_feat").count().collect()
@@ -920,13 +919,11 @@ def test_fasttext_margin_on_1m_docs(spark):
     assert len(agg) == 1 and agg[0]["count"] == n and agg[0]["n_feat"] == 2
 
 
-def test_zorder_envelopes_on_5m_events(spark):
+def test_zorder_envelopes_on_5m_events(spark, tmp_path):
     """5M uniform (user, day) events: every z-bucket's envelope must stay
     a narrow slice of BOTH dimensions (the pruning guarantee) — with a
     uniform grid and the 6-bit z-prefix, each bucket covers at most 1/4
     of either quantized axis."""
-    import os, tempfile
-
     from kafkastreamsjavachallenge_spark.queries.graphs import q_zorder_layout
 
     n = 5_000_000
@@ -939,8 +936,8 @@ def test_zorder_envelopes_on_5m_events(spark):
         F.lit(1.0).alias("value"),
         F.lit("{}").alias("props"),
     )
-    d = tempfile.mkdtemp(prefix="zorder_scale_")
-    ev.write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
+    d = str(tmp_path)
+    ev.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
     t0 = time.time()
     rows = q_zorder_layout(spark, d).collect()
     elapsed = time.time() - t0
