@@ -10,20 +10,13 @@ Scale notes:
   ``defaultParallelism`` (one per core, no floor) instead of the
   session's relational shuffle setting, so each stateful stage runs in
   one wave of tasks.
-- Checkpoint writer: a checkpoint on the local file system is written
-  through Spark's FileSystem-based checkpoint manager on Hadoop's raw
-  local file system instead of the FileContext manager on the
-  checksummed one.  Without the native Hadoop library every local file
-  create and rename starts ``chmod``/``readlink`` helper processes;
-  FileContext starts about five times as many per file as the
-  FileSystem manager, and the checksummed file system starts one
-  ``chmod`` for the file and another for its ``.crc`` sidecar.  A
-  unique-users micro-batch writes 3 + 2 × cores checkpoint files.
-  Checkpoints on any other file system, and sessions that name their own
-  manager, keep the session's manager and file system (HDFS relies on
-  FileContext's atomic rename-with-overwrite); a query on any state-store
-  provider but the default HDFS-backed one keeps the checksummed file
-  system (RocksDB needs it).
+- Checkpoint manager: a checkpoint on the local file system is written
+  through Spark's FileSystem-based checkpoint manager instead of the
+  FileContext one, which starts several times as many helper processes
+  per local file.  Checkpoints on any other file system, and sessions
+  that name their own manager, keep the session's manager (HDFS relies
+  on FileContext's atomic rename-with-overwrite).  DESIGN.md has the
+  measurements behind both rules.
 - The file sink is exactly-once per partition via the sink log; partition
   the output by a low-cardinality time-derived column so downstream scans
   partition-prune (never by a high-cardinality key — small-files blowup).
@@ -34,8 +27,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import json
-import os
 import threading
 from collections.abc import Callable
 from urllib.parse import urlsplit
@@ -48,18 +39,6 @@ _CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 _FS_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
-)
-# Hadoop's local file system without the checksum layer, uncached: Hadoop
-# caches one FileSystem per scheme and user whatever the conf, so without
-# disable.cache the session's cached checksummed instance comes back.
-_RAW_LOCAL_FS = {
-    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
-    "fs.file.impl.disable.cache": "true",
-}
-_STATE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
-# The one provider that runs on the raw local file system (see _start).
-_HDFS_STATE_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 )
 # Held across set -> start() -> restore so two threads starting queries on
 # one session cannot restore each other's values.
@@ -78,22 +57,6 @@ def _is_local_path(spark: SparkSession, path: str) -> bool:
     return scheme.lower() == "file"
 
 
-def _state_provider(spark: SparkSession, checkpoint: str) -> str:
-    """The state-store provider class a query at the local ``checkpoint``
-    runs: the one its latest offset-log entry pins (a resumed query keeps
-    it), else the session's."""
-    url = urlsplit(checkpoint)
-    offsets = os.path.join(url.path if url.scheme else checkpoint, "offsets")
-    session = spark.conf.get(_STATE_PROVIDER)
-    try:
-        latest = max((n for n in os.listdir(offsets) if n.isdigit()), key=int)
-    except (FileNotFoundError, ValueError):  # a new checkpoint, or no entry yet
-        return session
-    with open(os.path.join(offsets, latest)) as f:
-        f.readline()  # log version; the entry's metadata is the next line
-        return json.loads(f.readline()).get("conf", {}).get(_STATE_PROVIDER, session)
-
-
 def _start(
     writer: DataStreamWriter,
     spark: SparkSession,
@@ -101,8 +64,7 @@ def _start(
 ) -> StreamingQuery:
     """Start ``writer`` checkpointed at ``checkpoint``, with one state store
     per core for each stateful operator and a local checkpoint written
-    through the FileSystem-based checkpoint manager on the raw local file
-    system.
+    through the FileSystem-based checkpoint manager.
 
     State count: a streaming query's state-store count is the
     shuffle-partition conf live when the query is constructed: ``start()``
@@ -112,44 +74,30 @@ def _start(
     track state-key cardinality × executors, not the relational shuffle
     setting (a vanilla session's 200 means 200 commits per stateful
     operator per batch, even for tiny state).  The count is
-    ``defaultParallelism``, one store per core, with no floor: a count
-    above the core count runs each stateful stage in more than one wave of
-    tasks and commits more state deltas per batch without adding
-    parallelism (on 4 cores, dropping a floor of 8 cut ``uu_stream``
-    latency p50 by 16-19%).  Inside the stream it applies to every shuffle,
-    including those a foreachBatch function runs on its batch DataFrame.
+    ``defaultParallelism``, one store per core, with no floor: more stores
+    than cores run each stateful stage in more than one wave of tasks and
+    commit more state deltas per batch without adding parallelism.  Inside
+    the stream it applies to every shuffle, including those a foreachBatch
+    function runs on its batch DataFrame.
 
-    Checkpoint writer: when ``checkpoint`` is on the local file system
+    Checkpoint manager: when ``checkpoint`` is on the local file system
     (``_is_local_path``) and the session names no manager class,
     ``spark.sql.streaming.checkpointFileManagerClass`` is set to the
-    FileSystem-based manager and ``fs.file.impl`` to Hadoop's
-    ``RawLocalFileSystem``, with ``fs.file.impl.disable.cache`` so that the
-    session's cached checksummed instance does not come back.  ``start()``
-    builds the offset and commit logs under them, and the state stores run
-    on the stream's session clone, which keeps them.  Without the native
-    Hadoop library, local file operations start helper processes: the
-    checksummed file system's create starts one ``chmod`` for the file and
-    another for its ``.crc`` sidecar, the raw one writes no sidecar, and
-    the default FileContext manager costs ≈ 20 per file.  A unique-users
-    micro-batch on 4 cores starts ≈ 28 processes this way, against ≈ 90
-    with 8 stores on the checksummed file system.  A local ``rename(2)``
-    is atomic under either manager, and a reader ignores a missing
-    ``.crc``, so checkpoints written under one writer resume under the
-    other.  A batch re-run after a crash rewrites its state deltas byte
-    for byte, so the old ``.crc`` the raw writer leaves beside an
-    overwritten delta still matches.  Other file systems keep the
-    session's values: HDFS relies on FileContext's atomic
-    rename-with-overwrite.  A session that names its own manager class
-    keeps its own writer, checksummed file system included.  The raw file
-    system is set only when the query's state-store provider is the
-    default HDFS-backed one (``_state_provider``): RocksDB's file manager
-    copies through ``FileSystem.getLocal``, which fails with a
-    ``ClassCastException`` when ``fs.file.impl`` is not a
-    ``LocalFileSystem``.  The file
-    source's own log (``sources/N``) is built later from the caller's
-    session and stays on the session's writer.
+    FileSystem-based manager.  ``start()`` builds the offset and commit
+    logs under it, and the state stores run on the stream's session clone,
+    which keeps it.  Without the native Hadoop library every local file
+    create and rename starts helper processes, several times as many
+    through the default FileContext manager.  A local ``rename(2)`` is
+    atomic under either manager and both write the same files, so
+    checkpoints written under one resume under the other.  Other file
+    systems keep the session's value: HDFS relies on FileContext's atomic
+    rename-with-overwrite.  The file source's own log (``sources/N``) is
+    built later from the caller's session and stays on the session's
+    manager.  Hadoop's file-system settings are left as they are: the
+    stream's session clone carries every conf set here into the sink and
+    into a foreachBatch function's writes.
 
-    All confs hold their values only while ``start()`` runs and are
+    Both confs hold their values only while ``start()`` runs and are
     restored (or unset) as soon as it returns, so batch queries planned
     on the session while the stream runs see the user's settings.
     """
@@ -160,8 +108,6 @@ def _start(
             spark, checkpoint
         ):
             overrides[_CHECKPOINT_MANAGER] = _FS_CHECKPOINT_MANAGER
-            if _state_provider(spark, checkpoint) == _HDFS_STATE_PROVIDER:
-                overrides.update(_RAW_LOCAL_FS)
         saved = {k: spark.conf.get(k, None) for k in overrides}
         for k, v in overrides.items():
             spark.conf.set(k, v)

@@ -88,10 +88,6 @@ MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 _CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
 FS_MANAGER = _CHECKPOINTING + "FileSystemBasedCheckpointFileManager"
 FC_MANAGER = _CHECKPOINTING + "FileContextBasedCheckpointFileManager"
-FILE_FS = "fs.file.impl"
-RAW_LOCAL_FS = "org.apache.hadoop.fs.RawLocalFileSystem"
-PROVIDER = "spark.sql.streaming.stateStore.providerClass"
-ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
 
 @pytest.fixture
@@ -216,16 +212,11 @@ def test_every_sink_starts_under_state_partition_rule(
     spark, monkeypatch, tmp_path, vanilla_shuffle
 ):
     """All three public sinks start under the state-count rule and the
-    checkpoint-writer rule, and restore the session values after.  A
-    local checkpoint starts under the FileSystem-based manager on the raw
-    local file system; a non-local one, or a session that already names a
-    manager, starts under the session's own manager and file system; a
-    RocksDB state store, named by the session or pinned by the
-    checkpoint's offset log, keeps the checksummed file system.  No
-    broker or HDFS exists here, so start() is replaced by a recorder of
-    the live confs."""
-    import json
-
+    checkpoint-manager rule, and restore the session values after.  A
+    local checkpoint starts under the FileSystem-based manager; a
+    non-local one, or a session that already names a manager, starts
+    under the session's own value.  No broker or HDFS exists here, so
+    start() is replaced by a recorder of the live confs."""
     from pyspark.sql.streaming import DataStreamWriter
 
     from kafkastreamsjavachallenge_spark.sources.kafka import write_counts
@@ -239,11 +230,7 @@ def test_every_sink_starts_under_state_partition_rule(
         DataStreamWriter,
         "start",
         lambda self, *a, **k: seen.append(
-            (
-                spark.conf.get(SHUFFLE),
-                spark.conf.get(MANAGER, None),
-                spark.conf.get(FILE_FS, None),
-            )
+            (spark.conf.get(SHUFFLE), spark.conf.get(MANAGER, None))
         ),
     )
     counts = spark.readStream.format("rate").load().select(
@@ -260,26 +247,13 @@ def test_every_sink_starts_under_state_partition_rule(
         return seen
 
     assert spark.conf.get(MANAGER, None) is None
-    assert spark.conf.get(FILE_FS, None) is None
-    local = [(auto, FS_MANAGER, RAW_LOCAL_FS)] * 3
-    assert start_all(str(tmp_path / "ckpt")) == local
-    assert start_all((tmp_path / "ckpt").as_uri()) == local
-    assert start_all("hdfs://nn:8020/ckpt") == [(auto, None, None)] * 3
+    assert start_all(str(tmp_path / "ckpt")) == [(auto, FS_MANAGER)] * 3
+    assert start_all((tmp_path / "ckpt").as_uri()) == [(auto, FS_MANAGER)] * 3
+    assert start_all("hdfs://nn:8020/ckpt") == [(auto, None)] * 3
     assert spark.conf.get(MANAGER, None) is None
-    assert spark.conf.get(FILE_FS, None) is None
-    assert spark.conf.get(FILE_FS + ".disable.cache", None) is None
-    pinned = tmp_path / "ckpt_rocksdb" / "offsets"
-    pinned.mkdir(parents=True)
-    (pinned / "0").write_text("v1\n" + json.dumps({"conf": {PROVIDER: ROCKSDB}}) + "\n")
-    assert start_all(str(pinned.parent)) == [(auto, FS_MANAGER, None)] * 3
-    spark.conf.set(PROVIDER, ROCKSDB)
-    try:
-        assert start_all(str(tmp_path / "ckpt")) == [(auto, FS_MANAGER, None)] * 3
-    finally:
-        spark.conf.unset(PROVIDER)
     spark.conf.set(MANAGER, FC_MANAGER)
     try:
-        assert start_all(str(tmp_path / "ckpt")) == [(auto, FC_MANAGER, None)] * 3
+        assert start_all(str(tmp_path / "ckpt")) == [(auto, FC_MANAGER)] * 3
         assert spark.conf.get(MANAGER) == FC_MANAGER
     finally:
         spark.conf.unset(MANAGER)
@@ -289,9 +263,8 @@ def test_concurrent_starts_do_not_restore_each_others_conf(
     spark, monkeypatch, tmp_path, vanilla_shuffle
 ):
     """Three threads starting queries at once: each start() sees the state
-    count and its own checkpoint manager and local file system (two local
-    checkpoints, one on HDFS) for the whole call, and the session ends at
-    its own values."""
+    count and its own checkpoint manager (two local checkpoints, one on
+    HDFS) for the whole call, and the session ends at its own values."""
     import threading
     import time as _t
 
@@ -303,11 +276,7 @@ def test_concurrent_starts_do_not_restore_each_others_conf(
     entered = threading.Event()
 
     def live():
-        return (
-            spark.conf.get(SHUFFLE),
-            spark.conf.get(MANAGER, None),
-            spark.conf.get(FILE_FS, None),
-        )
+        return spark.conf.get(SHUFFLE), spark.conf.get(MANAGER, None)
 
     def slow_start(self, *a, **k):
         entered.set()
@@ -332,11 +301,11 @@ def test_concurrent_starts_do_not_restore_each_others_conf(
     assert not any(t.is_alive() for t in threads)
     auto = str(spark.sparkContext.defaultParallelism)
     assert [seen.get(id(w)) for w in writers] == [
-        ((auto, FS_MANAGER, RAW_LOCAL_FS),) * 2,
-        ((auto, None, None),) * 2,
-        ((auto, FS_MANAGER, RAW_LOCAL_FS),) * 2,
+        ((auto, FS_MANAGER),) * 2,
+        ((auto, None),) * 2,
+        ((auto, FS_MANAGER),) * 2,
     ]
-    assert live() == ("200", None, None)
+    assert live() == ("200", None)
 
 
 def test_resume_keeps_checkpoint_state_partitions(spark, event_files, tmp_path):
@@ -531,26 +500,36 @@ def _log_managers(q) -> tuple[str, str]:
 def test_local_checkpoint_uses_filesystem_manager(spark, event_files, tmp_path):
     """A local checkpoint's offset and commit logs are written through the
     FileSystem-based manager; the stream's session copy carries the class
-    and the raw local file system, and the caller's session reads as it
-    did before start()."""
+    and the caller's session reads as it did before start().  Code in the
+    foreachBatch function can still call ``FileSystem.getLocal`` on the
+    batch's Hadoop conf (it casts the ``file:`` file system to the
+    checksummed ``LocalFileSystem``; S3A's disk-buffered upload calls
+    it)."""
     from kafkastreamsjavachallenge_spark.streaming.sinks import for_each_batch
 
     d, ev = event_files
     assert spark.conf.get(MANAGER, None) is None
     rows = []
+    local_fs = []
+
+    def collect(bdf, _):
+        conf = bdf.sparkSession._jsparkSession.sessionState().newHadoopConf()
+        local = spark._jvm.org.apache.hadoop.fs.FileSystem.getLocal(conf)
+        local_fs.append(local.getUri().toString())
+        rows.extend(bdf.collect())
+
     q = for_each_batch(
         streaming_unique_users(file_stream(spark, d, ev.schema), "ts", "user_id", "1 minute"),
-        lambda bdf, _: rows.extend(bdf.collect()),
+        collect,
         str(tmp_path / "ckpt_fs"),
     )
     q.awaitTermination()
     assert rows
+    assert set(local_fs) == {"file:///"}
     assert _log_managers(q) == (FS_MANAGER, FS_MANAGER)
     stream_conf = q._jsq.streamingQuery().sparkSessionForStream().conf()
     assert stream_conf.get(MANAGER) == FS_MANAGER
-    assert stream_conf.get(FILE_FS) == RAW_LOCAL_FS
     assert spark.conf.get(MANAGER, None) is None
-    assert spark.conf.get(FILE_FS, None) is None
 
 
 def test_filecontext_checkpoint_resumes_under_filesystem_manager(
@@ -601,27 +580,16 @@ def test_filecontext_checkpoint_resumes_under_filesystem_manager(
     assert _final_counts(resumed) == _final_counts(whole)
 
 
-def _crc_dirs(ckpt: str) -> set[str]:
-    """Top-level entries of a checkpoint that hold a ``.crc`` sidecar."""
-    return {
-        os.path.relpath(root, ckpt).split(os.sep)[0]
-        for root, _, names in os.walk(ckpt)
-        if any(n.endswith(".crc") for n in names)
-    }
-
-
 @pytest.mark.parametrize("first", ["plain", "rule"])
 def test_local_checkpoint_crosses_writers_and_reruns_a_batch(
     spark, event_files, tmp_path, first
 ):
-    """A local checkpoint resumes across the plain checksummed writer (a
-    writer started on the session as is) and ``_start``'s raw one, in both
-    orders, and survives a re-run batch.  ``_start`` writes no ``.crc``
-    under offsets/, commits/ or state/ (only the file source's sources/
-    log has them).  After the first step the last commits/N is dropped, as
+    """A local checkpoint resumes across the plain writer (a writer
+    started on the session as is, through the FileContext manager) and
+    ``_start``'s FileSystem-based one, in both orders, and survives a
+    re-run batch.  After the first step the last commits/N is dropped, as
     a crash before the commit would leave it, so the second step re-runs
-    that batch with the other writer and overwrites its state deltas (an
-    overwritten file keeps its old ``.crc`` under the raw writer); the
+    that batch with the other writer and overwrites its state deltas; the
     third step reads them back with the first writer.  The cached state
     providers are unloaded between steps so each step re-reads the files.
     Final counts equal those of one uninterrupted run."""
@@ -659,12 +627,6 @@ def test_local_checkpoint_crosses_writers_and_reruns_a_batch(
 
     second = {"plain": "rule", "rule": "plain"}[first]
     step(first, 2)
-    checksummed = {"offsets", "commits", "state"}
-    if first == "rule":
-        assert "sources" in _crc_dirs(ckpt)
-        assert not _crc_dirs(ckpt) & checksummed
-    else:
-        assert checksummed <= _crc_dirs(ckpt)
     commits = Path(ckpt, "commits")
     last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
     for p in (commits / str(last), commits / f".{last}.crc"):
@@ -846,53 +808,6 @@ def test_flagship_on_rocksdb_state_store(spark, event_files, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, saved)
-
-
-def test_rocksdb_checkpoint_resumes_on_default_provider_session(
-    spark, event_files, tmp_path
-):
-    """A local checkpoint begun on the RocksDB provider resumes through
-    ``_start`` on a session that names no provider: the offset log pins
-    RocksDB, so the query keeps the checksummed local file system that
-    RocksDB's file manager needs, and its final counts equal the batch
-    result."""
-    import shutil
-
-    from kafkastreamsjavachallenge_spark.streaming.sinks import for_each_batch
-
-    d, ev = event_files
-    files = sorted(os.listdir(d))
-    src = tmp_path / "src"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    emitted: list = []
-
-    def run(n_files):
-        for f in files[len(os.listdir(src)):n_files]:
-            shutil.copy(os.path.join(d, f), src / f)
-        stream = file_stream(spark, str(src), ev.schema, max_files_per_trigger=1)
-        for_each_batch(
-            streaming_unique_users(stream, "ts", "user_id", "1 minute"),
-            lambda bdf, _: emitted.extend(
-                (r["window_start"], r["unique_users"]) for r in bdf.collect()
-            ),
-            ckpt,
-        ).awaitTermination()
-
-    assert spark.conf.get(PROVIDER, None) is None
-    spark.conf.set(PROVIDER, ROCKSDB)
-    try:
-        run(2)
-    finally:
-        spark.conf.unset(PROVIDER)
-    first = len(emitted)
-    run(len(files))
-    assert 0 < first < len(emitted)
-    want = {
-        r["window_start"]: r["unique_users"]
-        for r in unique_users(ev, "ts", "user_id").collect()
-    }
-    assert _final_counts(emitted) == want
 
 
 def test_rate_source_liveness(spark, tmp_path):
