@@ -70,7 +70,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
     if name == "events":
-        df = with_event_time(df, "ts")
+        df = with_event_time(df, "ts", path)
     return _maybe_relayout(spark, path, name, df)
 
 

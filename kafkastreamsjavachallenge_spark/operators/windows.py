@@ -8,30 +8,35 @@ Reference parity (citations into /root/reference/):
   reference's own batch-Spark oracle is README.md:55-56.
 - HashSet set-union agg:     UniqueUsersApp.java:173-191 (A4).
 
-Scale design: every operator here is a groupBy over ``F.window`` — a single
-shuffle on (window, key) with map-side partial aggregation.  The reference's
-producer-side co-partitioning by minute (README.md:90-105) is subsumed by
-the shuffle; AQE coalesces/splits partitions at runtime, and watermarks (in
-the streaming layer) bound state where the reference's RocksDB retention was
-broken (README.md:196).
+Scale design: every tumbling operator here groups on the integer window
+start — a single shuffle on (window start, key) with map-side partial
+aggregation.  The reference's producer-side co-partitioning by minute
+(README.md:90-105) is subsumed by the shuffle; AQE coalesces/splits
+partitions at runtime, and watermarks (in the streaming layer) bound state
+where the reference's RocksDB retention was broken (README.md:196).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from decimal import Decimal
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType, TimestampType
 
 
-def with_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def with_event_time(df: DataFrame, ts_col: str = "ts", path: str | None = None) -> DataFrame:
     """Normalize a parquet-typed event-time column to TimestampType — the
     engine's one event-time rule, as the reference has one timestamp
     extractor (LogFrameTimestampExtractor.java:8-14).  The catalog and
     every stream reader go through it; ``withWatermark`` and
     ``unix_micros`` need TimestampType.  Drops no rows.
 
-    - ``timestamp_ntz`` (parquet TIMESTAMP without a UTC annotation):
-      cast.  The session timezone is pinned to UTC (session.py), so the
-      cast keeps the values of DuckDB's naive read of the same file.
+    - ``timestamp_ntz`` (parquet TIMESTAMP without a UTC annotation): the
+      parquet file ``df`` was read from at ``path`` read again with the
+      column typed TIMESTAMP (no per-row zone conversion), else a cast.
+      The session timezone is pinned to UTC (session.py), so both keep
+      the values of DuckDB's naive read of the same file.
     - ``bigint`` (parquet TIMESTAMP(NANOS) read as long under the
       session's ``nanosAsLong``): integer division to microseconds,
       truncating the way DuckDB does.
@@ -41,6 +46,10 @@ def with_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     (sources/kafka.py ``parse_log_frames``), not here.
     """
     dt = dict(df.dtypes).get(ts_col)
+    if dt == "timestamp_ntz" and path is not None:
+        ts = StructField(ts_col, TimestampType(), df.schema[ts_col].nullable)
+        schema = StructType([ts if f.name == ts_col else f for f in df.schema])
+        return df.sparkSession.read.schema(schema).parquet(path)
     if dt == "timestamp_ntz":
         return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     if dt == "bigint":
@@ -48,14 +57,20 @@ def with_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     return df
 
 
-def tumbling(df: DataFrame, ts_col: str, duration: str) -> DataFrame:
-    """Assign non-overlapping event-time windows (W1).
-
-    Adds ``window_start`` / ``window_end`` columns.  Pure projection — no
-    shuffle until a downstream groupBy.
-    """
-    w = F.window(F.col(ts_col), duration)
-    return df.withColumn("window_start", w.start).withColumn("window_end", w.end)
+def _on_window_start(df: DataFrame, ts_col: str, duration: str, op) -> DataFrame:
+    """``op`` on the rows with an event time, keyed on ``window_start``, the
+    integer microsecond start of ``F.window``'s tumbling window (same width
+    parser, ``pmod`` rounds pre-1970 times down, same null filter), which
+    the output turns into a timestamp."""
+    tw = df.sparkSession._jvm.org.apache.spark.sql.catalyst.expressions.TimeWindow
+    width = tw.getIntervalInMicroSeconds(duration)
+    if width <= 0:
+        raise ValueError(f"window duration must be positive: {duration!r}")
+    us = F.unix_micros(F.col(ts_col))
+    df = with_event_time(df, ts_col).filter(F.col(ts_col).isNotNull())
+    out = op(df.withColumn("window_start", us - F.pmod(us, F.lit(width))))
+    seconds = F.col("window_start") * F.lit(Decimal("0.000001"))  # exact to the microsecond
+    return out.withColumn("window_start", F.timestamp_seconds(seconds))
 
 
 def sliding(df: DataFrame, ts_col: str, duration: str, slide: str) -> DataFrame:
@@ -67,11 +82,8 @@ def windowed_count(
     df: DataFrame, ts_col: str, duration: str, *keys: str
 ) -> DataFrame:
     """Count per (window, keys) — A2.  One shuffle, partial agg map-side."""
-    return (
-        df.groupBy(F.window(F.col(ts_col), duration).alias("window"), *keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("window.start").alias("window_start"), *keys, "n")
-    )
+    n = F.count(F.lit(1)).alias("n")
+    return _on_window_start(df, ts_col, duration, lambda w: w.groupBy("window_start", *keys).agg(n))
 
 
 def windowed_dedup(
@@ -84,11 +96,7 @@ def windowed_dedup(
     [window, keys].  In streaming this becomes
     ``withWatermark(...).dropDuplicates`` with watermark-bounded state.
     """
-    w = F.window(F.col(ts_col), duration)
-    return (
-        df.withColumn("window_start", w.start)
-        .dropDuplicates(["window_start", *keys])
-    )
+    return _on_window_start(df, ts_col, duration, lambda w: w.dropDuplicates(["window_start", *keys]))
 
 
 def unique_users(
@@ -100,16 +108,13 @@ def unique_users(
     """The flagship: exact unique-uid count per tumbling window (A3).
 
     Matches the reference's own batch oracle (README.md:55-56):
-    groupBy(minute) → countDistinct(uid).  Physically: partial
-    distinct-aggregation map-side, one shuffle on window, final agg —
-    Catalyst plans the two-phase distinct automatically.
+    groupBy(minute) → countDistinct(uid).  Physically: Catalyst's two-phase
+    distinct on the integer window start, then the rows, one per window,
+    sorted in one partition, which needs no range-sampling job.
     """
-    return (
-        df.groupBy(F.window(F.col(ts_col), duration).alias("window"))
-        .agg(F.countDistinct(F.col(uid_col)).alias("unique_users"))
-        .select(F.col("window.start").alias("window_start"), "unique_users")
-        .orderBy("window_start")
-    )
+    n = F.countDistinct(F.col(uid_col)).alias("unique_users")
+    out = _on_window_start(df, ts_col, duration, lambda w: w.groupBy("window_start").agg(n))
+    return out.repartition(1).sortWithinPartitions("window_start")
 
 
 def unique_users_approx(
@@ -121,11 +126,8 @@ def unique_users_approx(
 ) -> DataFrame:
     """Approximate variant (HLL++) — the scale path for 100 TB: constant
     memory per window instead of a distinct-set shuffle."""
-    return (
-        df.groupBy(F.window(F.col(ts_col), duration).alias("window"))
-        .agg(F.approx_count_distinct(uid_col, rsd).alias("approx_unique_users"))
-        .select(F.col("window.start").alias("window_start"), "approx_unique_users")
-    )
+    n = F.approx_count_distinct(uid_col, rsd).alias("approx_unique_users")
+    return _on_window_start(df, ts_col, duration, lambda w: w.groupBy("window_start").agg(n))
 
 
 def collect_uid_set(
@@ -142,15 +144,12 @@ def collect_uid_set(
     deterministic; at scale prefer unique_users() which never materializes
     the set per row.
     """
-    uid_str = F.col(uid_col).cast("string")
-    return (
-        df.groupBy(F.window(F.col(ts_col), duration).alias("window"))
-        .agg(F.sort_array(F.collect_set(uid_str)).alias("uids"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.concat_ws("|", F.col("uids")).alias("uid_list"),
-            F.size(F.col("uids")).alias("n_unique"),
-        )
+    uids = F.sort_array(F.collect_set(F.col(uid_col).cast("string"))).alias("uids")
+    out = _on_window_start(df, ts_col, duration, lambda w: w.groupBy("window_start").agg(uids))
+    return out.select(
+        "window_start",
+        F.concat_ws("|", F.col("uids")).alias("uid_list"),
+        F.size(F.col("uids")).alias("n_unique"),
     )
 
 

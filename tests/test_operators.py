@@ -8,6 +8,7 @@ import datetime as dt
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import Row, functions as F
 
 from kafkastreamsjavachallenge_spark.catalog import load_table
@@ -23,8 +24,12 @@ from kafkastreamsjavachallenge_spark.operators.multimodal import (
 )
 from kafkastreamsjavachallenge_spark.operators.relational import asof_join
 from kafkastreamsjavachallenge_spark.operators.windows import (
+    collect_uid_set,
     unique_users,
+    unique_users_approx,
+    windowed_count,
     windowed_dedup,
+    with_event_time,
 )
 
 from tests.conftest import SF_DIR
@@ -530,6 +535,108 @@ def test_flagship_on_empty_input(spark):
     out = unique_users(empty, "ts", "user_id")
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["window_start", "unique_users"]
+
+
+# Window edges at every tested width, the microsecond either side of
+# them, pre-1970 times (``pmod`` must round down there as ``window()``
+# does) and a row with no event time.
+_EDGE_EVENTS = [
+    ("a", "click", "2024-01-01 00:00:00"),
+    ("b", "click", "2024-01-01 00:00:00"),
+    ("a", "view", "2023-12-31 23:59:59.999999"),
+    ("c", "view", "2024-01-01 00:00:10"),
+    ("a", "click", "2024-01-01 00:00:09.999999"),
+    ("d", "click", "2024-01-01 00:01:00"),
+    ("b", "view", "2024-01-01 01:00:00.000001"),
+    ("a", "click", "1970-01-01 00:00:00"),
+    ("e", "view", "1969-12-31 23:59:59.999999"),
+    ("e", "view", "1969-12-31 23:59:00"),
+    ("f", "click", "1969-12-31 00:00:00"),
+    ("a", "view", "1960-06-15 12:34:56.5"),
+    ("g", "click", None),
+]
+
+
+def _edge_frame(spark, form):
+    """The edge events with ``ts`` as timestamp, timestamp_ntz or bigint
+    nanoseconds, routed through the engine's event-time rule."""
+    df = spark.createDataFrame(_EDGE_EVENTS, "user_id string, event_type string, t string")
+    ts = F.col("t").cast("timestamp")
+    if form == "timestamp_ntz":
+        ts = F.col("t").cast("timestamp_ntz")
+    elif form == "bigint":
+        ts = F.unix_micros(ts) * 1000
+    return with_event_time(df.select("user_id", "event_type", ts.alias("ts")), "ts")
+
+
+def _struct_forms(df, d):
+    """Each tumbling operator as it was written over the ``F.window``
+    struct, the reference the integer-keyed operators must equal."""
+    win = F.window("ts", d).alias("window")
+    start = F.col("window.start").alias("window_start")
+    uids = F.sort_array(F.collect_set(F.col("user_id").cast("string")))
+    return {
+        "unique_users": df.groupBy(win)
+        .agg(F.countDistinct("user_id").alias("unique_users"))
+        .select(start, "unique_users"),
+        "unique_users_approx": df.groupBy(win)
+        .agg(F.approx_count_distinct("user_id", 0.05).alias("approx_unique_users"))
+        .select(start, "approx_unique_users"),
+        "windowed_count": df.groupBy(win, "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(start, "event_type", "n"),
+        "windowed_dedup": df.withColumn("window_start", F.window("ts", d).start)
+        .dropDuplicates(["window_start", "user_id"])
+        .select("window_start", "user_id"),
+        "collect_uid_set": df.groupBy(win)
+        .agg(uids.alias("uids"))
+        .select(
+            start,
+            F.concat_ws("|", "uids").alias("uid_list"),
+            F.size("uids").alias("n_unique"),
+        ),
+    }
+
+
+@pytest.mark.parametrize("form", ["timestamp", "timestamp_ntz", "bigint"])
+@pytest.mark.parametrize("d", ["10 seconds", "1 minute", "1 hour", "1 day"])
+def test_tumbling_operators_equal_window_struct_form(spark, d, form):
+    """Every integer-keyed tumbling operator returns the rows, columns and
+    types of its ``F.window`` struct form: same window edges before and
+    after 1970, and no window for a row without an event time."""
+    df = _edge_frame(spark, form)
+    got = {
+        "unique_users": unique_users(df, "ts", "user_id", d),
+        "unique_users_approx": unique_users_approx(df, "ts", "user_id", d),
+        "windowed_count": windowed_count(df, "ts", d, "event_type"),
+        # which row's other columns survive is not fixed; the keys are
+        "windowed_dedup": windowed_dedup(df, "ts", d, "user_id").select(
+            "window_start", "user_id"
+        ),
+        "collect_uid_set": collect_uid_set(df, "ts", "user_id", d),
+    }
+    for name, want in _struct_forms(df, d).items():
+        assert got[name].dtypes == want.dtypes, name
+        rows = sorted(got[name].collect())
+        assert rows == sorted(want.collect()), name
+        assert all(r["window_start"] is not None for r in rows), name
+    starts = [r["window_start"] for r in got["unique_users"].collect()]
+    assert starts == sorted(starts)
+
+
+def test_windowed_dedup_keeps_input_columns(spark):
+    df = _edge_frame(spark, "timestamp")
+    out = windowed_dedup(df, "ts", "1 minute", "user_id")
+    assert out.columns == [*df.columns, "window_start"]
+
+
+@pytest.mark.parametrize("d", ["0 seconds", "-1 minute", "1 month"])
+def test_tumbling_operators_reject_durations_window_rejects(spark, d):
+    df = _edge_frame(spark, "timestamp")
+    with pytest.raises(Exception):
+        df.groupBy(F.window("ts", d)).count().collect()
+    with pytest.raises((ValueError, IllegalArgumentException)):
+        unique_users(df, "ts", "user_id", d)
 
 
 def test_minhash_on_empty_and_short_docs(spark):

@@ -8,12 +8,15 @@ Backed by the engine's own plan-introspection surface
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from kafkastreamsjavachallenge_spark.catalog import load_table
 from kafkastreamsjavachallenge_spark.plans import (
     executed_plan,
+    formatted_plan,
     lint,
     plan_summary,
     pushed_filters,
@@ -58,6 +61,36 @@ def test_flagship_has_partial_aggregation(spark):
     p = plan(REG["q_unique_users"][0](spark, SF_DIR))
     assert "HashAggregate" in p
     assert "partial_count" in p
+
+
+def test_flagship_keys_on_integer_window_start_without_sampling(spark):
+    """The flagship groups on the integer window start, not on the
+    ``window()`` struct, and orders its one row per window inside a single
+    partition: no range shuffle, so no sampling job.  The final plan
+    (after the collect) still has the partial count."""
+    df = REG["q_unique_users"][0](spark, SF_DIR)
+    starts = [r["window_start"] for r in df.collect()]
+    assert len(starts) > 1 and starts == sorted(starts)
+    p = formatted_plan(df)
+    assert "rangepartitioning" not in p.lower()
+    assert "partial_count" in p
+    structs = re.findall(r"named_struct\(.*?\) AS (\w+#\d+)", p)
+    keys = re.findall(r"Keys \[\d+\]: \[([^\]]*)\]", p)
+    assert keys
+    assert not [k for k in keys if "named_struct" in k or any(s in k for s in structs)]
+
+
+def test_events_event_time_reads_as_timestamp_without_cast(spark):
+    """The catalog reads events.ts (untagged parquet TIMESTAMP(MICROS)) as
+    TIMESTAMP: no per-row cast in the plan, the values of the cast, and
+    other tables keep Spark's inference."""
+    ev = load_table(spark, SF_DIR, "events")
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    assert "cast(ts" not in plan(ev.select("ts"))
+    cast = spark.read.parquet(f"{SF_DIR}/events.parquet").select(F.col("ts").cast("timestamp"))
+    assert sorted(ev.select("ts").collect()) == sorted(cast.collect())
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    assert load_table(spark, SF_DIR, "orders").dtypes == orders.dtypes
 
 
 def test_semi_anti_join_types(spark):

@@ -203,6 +203,7 @@ def test_streaming_state_bounded_on_rocksdb_5m_events(spark, tmp_path):
         streaming_sliding_counts,
         streaming_unique_users,
     )
+    from kafkastreamsjavachallenge_spark.streaming.sinks import _start
 
     n = 5_000_000
     n_files = 10
@@ -234,18 +235,17 @@ def test_streaming_state_bounded_on_rocksdb_5m_events(spark, tmp_path):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
     saved_provider = spark.conf.get(key, None)
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(key, rocks)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
 
     def drain(result, name, mode):
-        q = (
+        # the engine's start: its state-store count and checkpoint rules
+        q = _start(
             result.writeStream.format("memory")
             .queryName(name)
             .outputMode(mode)
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            spark,
+            str(tmp_path / f"ckpt_{name}"),
         )
         q.awaitTermination()
         per_batch, removed = [], 0
@@ -304,7 +304,6 @@ def test_streaming_state_bounded_on_rocksdb_5m_events(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, saved_provider)
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
 
 
 def test_triangle_count_on_ladder_graph(spark):
@@ -1706,6 +1705,7 @@ def test_streaming_sessions_bounded_on_rocksdb(spark, tmp_path):
         file_stream,
         streaming_session_counts,
     )
+    from kafkastreamsjavachallenge_spark.streaming.sinks import _start
 
     n_ids, n_files, users = 6_000_000, 10, 20_000
     epoch_s = 240
@@ -1740,21 +1740,20 @@ def test_streaming_sessions_bounded_on_rocksdb(spark, tmp_path):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
     saved_provider = spark.conf.get(key, None)
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(key, rocks)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         stream = file_stream(spark, d, ev.schema, max_files_per_trigger=1)
         sessions = streaming_session_counts(
             stream, "ts", "1 minute", "user_id", "2 minutes"
         )
-        q = (
+        # the engine's start: its state-store count and checkpoint rules
+        q = _start(
             sessions.writeStream.format("memory")
             .queryName("rocks_sessions")
             .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            spark,
+            str(tmp_path / "ckpt_sess"),
         )
         q.awaitTermination()
         per_batch, removed = [], 0
@@ -1813,7 +1812,6 @@ def test_streaming_sessions_bounded_on_rocksdb(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, saved_provider)
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
 
 
 def test_scale_profile_parity(spark):
